@@ -165,12 +165,7 @@ object Bench {
         s""""steal_ms":${stealMs - steal0}}"""
     }
 
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
+    import Verify.jstr
     val qs = timings.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
     val errJson = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
     val diagJson = diags.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")

@@ -62,8 +62,8 @@ object Sessions {
       // backed provider keeps every stateful operator's state as an
       // on-heap map and re-snapshots it wholesale per batch — at 100 TB
       // state scale that's an OOM by design, and even at bench scale the
-      // per-batch full-map commit is measurable: the Profile `streams`
-      // split showed st_dedup (largest per-key state in the family) at
+      // per-batch full-map commit is measurable: a per-batch progress
+      // split measured st_dedup (largest per-key state in the family) at
       // 6.9-7.5 s wall with addBatch dominating; RocksDB's incremental
       // commit cuts it to 2.3-3.0 s with every other st_* entry equal or
       // better. State lives off-heap with changelog-style checkpoints —

@@ -74,7 +74,13 @@ object AnnIndex {
     * integer sum is bit-exact on both engines (float→double widening is
     * exact, the double multiply+floor are identical IEEE ops, the sum
     * is exact integer arithmetic). */
-  def sig(spark: SparkSession, dir: String): String = {
+  def sig(spark: SparkSession, dir: String): String = sigFp(spark, dir)._1
+
+  /** [[sig]] plus the fingerprint it was resolved under. The ensure*
+    * paths hand that same fingerprint to [[recordFp]]: rescanning the
+    * files after training could bind a corpus changed in the meantime to
+    * the sig of the old one. */
+  private def sigFp(spark: SparkSession, dir: String): (String, String) = {
     // ARTIFACT-BACKED memo (r14, VERDICT r13 #5 — replaces the r13
     // in-process TrieMap, which made serve entries after the first
     // cheaper inside one bench JVM than in a cold process): each
@@ -89,13 +95,13 @@ object AnnIndex {
     // regenerated corpus (new sizes/mtimes — the driver regenerates
     // testdata between rounds) misses and rescans.
     val fp = fsFingerprint(dir)
-    storedSig(fp).getOrElse {
+    (storedSig(fp).getOrElse {
       val r = Tables.load(spark, dir, "embeddings")
         .agg(count(lit(1)).as("n"), sum(col("vec_id")).as("sv"),
           sum(floor(col("embedding").getItem(0).cast("double") * 1000000)
             .cast("long")).as("ev")).head()
       s"${r.getLong(0)}_${r.getLong(1)}_${r.getLong(2)}"
-    }
+    }, fp)
   }
 
   /** Scan the store for a component dir whose `_FP` sidecar contains
@@ -124,14 +130,13 @@ object AnnIndex {
     finally kinds.close()
   }
 
-  /** Record the corpus fingerprint into every existing `sig=<s>`
-    * component dir (idempotent append). Called by the ensure* paths
-    * AFTER their artifacts exist, so the sidecar always describes a
-    * complete tier. Multiple fingerprints per sidecar are fine — a
+  /** Record `fp`, the fingerprint [[sigFp]] resolved `s` under, into
+    * every existing `sig=<s>` component dir (idempotent append). Called
+    * by the ensure* paths AFTER their artifacts exist, so the sidecar
+    * always describes a complete tier. Multiple fingerprints per sidecar are fine — a
     * corpus rewritten byte-identically (same sig, new mtimes) appends
     * a second line mapping to the same sig. */
-  private def recordFp(s: String, dir: String): Unit = {
-    val fp = fsFingerprint(dir)
+  private def recordFp(s: String, fp: String): Unit = {
     val b = Paths.get(base)
     if (!Files.isDirectory(b)) return
     val kinds = Files.list(b)
@@ -388,7 +393,7 @@ object AnnIndex {
     * (books, codes) parquet paths for callers that want the artifact
     * TABLES rather than driver arrays (the incremental-encode op). */
   def ensurePqPaths(spark: SparkSession, dir: String): (String, String) = {
-    val s = sig(spark, dir)
+    val (s, fp) = sigFp(spark, dir)
     val bp = componentPath("pq", "books", s)
     val cp = componentPath("pq", "codes", s)
     if (!ready(bp) || !ready(cp)) {
@@ -397,7 +402,7 @@ object AnnIndex {
       writeAtomic(booksDf(spark, books), bp)
       writeAtomic(codes.coalesce(8), cp)
     }
-    recordFp(s, dir)
+    recordFp(s, fp)
     (bp, cp)
   }
 
@@ -409,7 +414,7 @@ object AnnIndex {
 
   /** Ensure the IVF artifact exists; returns the (cents, codes) paths. */
   def ensureIvfPaths(spark: SparkSession, dir: String): (String, String) = {
-    val s = sig(spark, dir)
+    val (s, fp) = sigFp(spark, dir)
     val kp = componentPath("ivf", "cents", s)
     val cp = componentPath("ivf", "codes", s)
     if (!ready(kp) || !ready(cp)) {
@@ -418,7 +423,7 @@ object AnnIndex {
       writeAtomic(centsDf(spark, model), kp)
       writeAtomic(codes.coalesce(8), cp)
     }
-    recordFp(s, dir)
+    recordFp(s, fp)
     (kp, cp)
   }
 
@@ -430,7 +435,7 @@ object AnnIndex {
 
   def ensureIvfPq(spark: SparkSession, dir: String)
       : (Array[Array[Double]], Array[Array[Array[Double]]], DataFrame) = {
-    val s = sig(spark, dir)
+    val (s, fp) = sigFp(spark, dir)
     val kp = componentPath("ivfpq", "cents", s)
     val bp = componentPath("ivfpq", "books", s)
     val cp = componentPath("ivfpq", "codes", s)
@@ -441,7 +446,7 @@ object AnnIndex {
       writeAtomic(booksDf(spark, books), bp)
       writeAtomic(codes.coalesce(8), cp)
     }
-    recordFp(s, dir)
+    recordFp(s, fp)
     (loadCents(spark, kp), loadBooks(spark, bp), spark.read.parquet(cp))
   }
 
@@ -471,7 +476,7 @@ object AnnIndex {
     * internals), so the cents parquet is the complete replayable
     * contract and the tier needs no codes component. */
   def ensureSemPath(spark: SparkSession, dir: String): String = {
-    val s = sig(spark, dir)
+    val (s, fp) = sigFp(spark, dir)
     val cp = componentPath("sem", "cents", s)
     if (!ready(cp)) {
       sweep(cp, s)
@@ -484,7 +489,7 @@ object AnnIndex {
         .fit(train.withColumn("fv", array_to_vector(col("v"))))
       writeAtomic(centsDf(spark, model), cp)
     }
-    recordFp(s, dir)
+    recordFp(s, fp)
     cp
   }
 }

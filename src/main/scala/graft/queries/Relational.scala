@@ -666,7 +666,7 @@ object Relational {
   // unlike brand-only, block sizes track the NAME VOCABULARY: on a
   // salted 10× catalog (vocabulary grows with the catalog, as real ones
   // do) candidates grow ~linearly where brand-only grows ~100×
-  // (Profile `fuzzy` probe). ~12 keys/row (2 tokens × (len+1) variants)
+  // (`ScaleProbes fuzzy`). ~12 keys/row (2 tokens × (len+1) variants)
   // is the indexing cost — linear, map-side; see [[j7Candidates]] for
   // why the candidate join is split into exact/near paths. The DISTINCT
   // collapses multi-key collisions before the O(len²) DP; the
@@ -678,7 +678,7 @@ object Relational {
   // splits the edit budget over two token regions. (A 5-token TPC-H
   // name would need the same scheme with ≤ 2 destroyed tokens of 5 —
   // exact token share — i.e. a weaker key and FEWER candidates.)
-  /** The blocking stage of j7, exposed for the Profile `fuzzy` probe:
+  /** The blocking stage of j7, exposed for `ScaleProbes fuzzy`:
     * distinct candidate pairs that collide on ≥ 1 (brand, token-pos,
     * SymSpell del-1 variant) key and pass the length-delta prefilter.
     *
