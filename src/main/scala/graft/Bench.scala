@@ -4,25 +4,16 @@ import java.nio.file.{Files, Paths}
 
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR.
   *
-  * Contract (round-1 fixes baked in):
-  *  - SAME session config as Verify ([[Sessions.local]]) — no more
-  *    config-drift crashes;
+  * Contract:
+  *  - SAME session config as Verify ([[Sessions.local]]);
   *  - per-query failures are RECORDED (errors map) and fail the run
   *    (nonzero exit), never silently timed as successes;
-  *  - the FULL metric JSON (metric/value/unit/queries/errors/sf/diag —
-  *    the same record as always) is written to bench_result.json AND to
-  *    a per-core-count bench_result_c<cpus>.json, so a lower-core
-  *    scaling run can no longer clobber the main run's per-query record
-  *    (VERDICT r13: the driver's c8 run destroyed its own c32 record);
-  *  - stdout's FINAL line is a COMPACT (≤200 B) summary JSON. The full
-  *    record had grown to ~30 KB on one line (227 timings + per-entry
-  *    gc/steal diags) and the driver keeps only a 2 KB stdout tail, so
-  *    the line's head — `{"metric":"total","value":…` — fell outside
-  *    the capture window and BENCH_r11/r12/r13 all parsed null. This is
-  *    a declared measurement-bug fix (guide §1: the record must be
-  *    readable to count): the timed loop, min-of-2 passes, noop sink
-  *    and isolation are byte-identical, no entry removed or renamed,
-  *    and the full per-query record still exists — in the two files.
+  *  - the FULL metric JSON (metric/value/unit/queries/errors/sf/diag) is
+  *    written to bench_result_c<cpus>.json, one record per core count,
+  *    so a lower-core scaling run never clobbers the main run's record;
+  *  - stdout's FINAL line is a COMPACT (≤200 B) summary JSON naming that
+  *    file: the full record is ~30 KB on one line (227 timings + per-entry
+  *    gc/steal diags), too long for a bounded stdout tail to keep.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -52,7 +43,7 @@ object Bench {
     // driver never sets it — the contract run times everything.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
     // Fail fast on unknown names: a typo would otherwise time an empty
-    // selection and overwrite bench_result.json with a 0-query "success".
+    // selection and overwrite the bench record with a 0-query "success".
     only.foreach { names =>
       val unknown = names -- SparkEntry.queries.keySet
       require(unknown.isEmpty,
@@ -104,21 +95,16 @@ object Bench {
         preExisting.values.map(_.name).mkString(", "))
 
     def isolate(): Unit = {
-      // Entry/pass isolation (VERDICT r8 #5, r10 #1a): cached wide tables /
-      // broadcasts / localCheckpoint blocks from a preceding pass or entry
-      // squeeze the storage pool and GC of the next timed region (the r9
-      // g1_pagerank swing: 12.2 s in-suite vs 4.8 s anchored, same plan —
-      // the checkpoint-heavy dedup block's pins were still resident).
-      // localCheckpoint pins live OUTSIDE the SQL cache and the
-      // ContextCleaner reaps them ASYNCHRONOUSLY after gc — a race — so
-      // drop them synchronously. Since r11 this runs before EVERY pass,
-      // not just every entry: pass 2 of a checkpoint-heavy query used to
-      // run with pass 1's pins still resident (g1 held items+edges+3 rank
-      // checkpoints twice over). Safe: nothing persisted by a finished
-      // pass is ever re-read — queries that deliberately reuse
-      // materialized state across passes do it through DISK artifacts
-      // (scratch parquet / the ANN index store), which isolation never
-      // touches.
+      // Entry/pass isolation: cached frames, broadcasts and
+      // localCheckpoint blocks from a preceding pass or entry squeeze the
+      // storage pool and GC of the next timed region (g1_pagerank once
+      // timed 12.2 s in-suite vs 4.8 s alone, same plan, with the dedup
+      // block's pins still resident). localCheckpoint pins live OUTSIDE
+      // the SQL cache and the ContextCleaner reaps them ASYNCHRONOUSLY
+      // after gc — a race — so drop them synchronously, before EVERY
+      // pass. Safe: no query reuses persisted state across calls; the
+      // only state that outlives a call is an on-disk artifact (the ANN
+      // index store), which isolation never touches.
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = true))
@@ -179,12 +165,11 @@ object Bench {
     val cpus = sys.env.get("SPARK_GRAFT_CPUS")
       .flatMap(_.trim.toIntOption)
       .getOrElse(Runtime.getRuntime.availableProcessors)
-    Files.writeString(Paths.get("bench_result.json"), json)
     Files.writeString(Paths.get(s"bench_result_c$cpus.json"), json)
     spark.stop()
-    // Final clean stdout line — the driver greps a bounded stdout TAIL
-    // for it, so it must be SMALL (see the contract note above): total +
-    // counts here, every per-query number in the two record files.
+    // Final stdout line, SMALL so a bounded stdout tail keeps it (see the
+    // contract note above): total + counts here, every per-query number
+    // in the record file.
     println(s"""{"metric":"total","value":$total,"unit":"sec",""" +
       s""""n_ok":${timings.size - errors.size},"n_err":${errors.size},""" +
       s""""sf":${jstr(sfDir)},"cpus":$cpus,""" +

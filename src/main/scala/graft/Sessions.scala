@@ -1,11 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SessionBridge, SparkSession}
 
 /** The ONE SparkSession builder for every graft main (Verify, Bench) and
-  * test suite. Round-1 lesson (VERDICT r01 §wrong-1): Bench had its own
-  * builder missing `nanosAsLong`, so every query touching events.parquet
-  * (TIMESTAMP_NANOS) crashed at bench time while Verify stayed green.
+  * test suite: a main or suite with its own builder drifts from this
+  * config (a missing `nanosAsLong` crashes every events query at bench
+  * time while Verify stays green).
   *
   * Config rationale:
   *  - shuffle.partitions = cpus: local[N] has N slots; 200 partitions on a
@@ -48,49 +48,35 @@ object Sessions {
       .config("spark.sql.ansi.enabled", "false")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // The driver regenerates testdata between rounds and its timestamp
-      // physical type has CHANGED once already (r7: TIMESTAMP(NANOS);
-      // r8: TIMESTAMP(MICROS, isAdjustedToUTC=false)). Non-UTC-adjusted
-      // micros default to TIMESTAMP_NTZ under Spark 4's inference, and
-      // NTZ is rejected by unix_micros() and streaming watermarks.
-      // Inference OFF reads them as TimestampType whose UTC wall-clock
-      // equals the stored naive value — exactly what DuckDB's naive read
-      // sees, so oracles are unaffected. (Tables.load also casts any NTZ
-      // column defensively, for sessions built elsewhere.)
+      // The testdata's timestamp physical type varies by generator
+      // (TIMESTAMP(NANOS), or TIMESTAMP(MICROS, isAdjustedToUTC=false)).
+      // Non-UTC-adjusted micros default to TIMESTAMP_NTZ under Spark 4's
+      // inference, and NTZ is rejected by unix_micros() and streaming
+      // watermarks. Inference OFF reads them as TimestampType whose UTC
+      // wall-clock equals the stored naive value — exactly what DuckDB's
+      // naive read sees, so oracles are unaffected. (Tables.load also
+      // casts any NTZ column defensively, for sessions built elsewhere.)
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // RocksDB state store (r11, VERDICT r10 #5): the default HDFS-
-      // backed provider keeps every stateful operator's state as an
-      // on-heap map and re-snapshots it wholesale per batch — at 100 TB
-      // state scale that's an OOM by design, and even at bench scale the
-      // per-batch full-map commit is measurable: a per-batch progress
-      // split measured st_dedup (largest per-key state in the family) at
-      // 6.9-7.5 s wall with addBatch dominating; RocksDB's incremental
-      // commit cuts it to 2.3-3.0 s with every other st_* entry equal or
-      // better. State lives off-heap with changelog-style checkpoints —
-      // the production provider for large state.
+      // RocksDB state store: the default HDFS-backed provider keeps every
+      // stateful operator's state as an on-heap map and re-snapshots it
+      // wholesale per batch — an OOM by design at large state, and
+      // measurable even at bench scale (st_dedup: 6.9-7.5 s with the
+      // default provider, 2.3-3.0 s with RocksDB's incremental commit).
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // Reliable checkpoints (Dedup's checkpointDir mode) are only
-      // deleted by the context cleaner when this is on (default false);
-      // without it every round of an iterative job leaks a full
-      // snapshot into the checkpoint dir.
+      // Reliable checkpoints (Dedup's `reliable` mode, MLlib's periodic
+      // checkpointer) are only deleted by the context cleaner when this
+      // is on (default false); without it every round of an iterative
+      // job leaks a full snapshot into the checkpoint dir.
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      // saveAsTable (K1) writes through the in-memory catalog; use a
-      // FRESH tmp warehouse per JVM — a fixed path fails on the next run
-      // with LOCATION_ALREADY_EXISTS (catalog is per-session, dir isn't).
-      // Scratch.dir is pid-scoped + stale-cleaned + deleted at exit, so
-      // per-JVM freshness holds without leaking a dir per run.
+      // saveAsTable (K1, J4) writes managed tables through the in-memory
+      // catalog into a FRESH tmp warehouse per JVM: a fixed path fails
+      // on the next run with LOCATION_ALREADY_EXISTS (the catalog is
+      // per-JVM, the dir isn't). Scratch.dir is pid-scoped, stale-cleaned
+      // and deleted at exit. A cluster that wants a shared metastore
+      // picks it at submit time (spark.sql.catalogImplementation=hive);
+      // nothing here depends on which catalog serves the tables.
       .config("spark.sql.warehouse.dir", graft.util.Scratch.dir("warehouse"))
-      // REAL metastore-backed catalog (r8, VERDICT r7 Next #4): K1's
-      // saveAsTable and J4's bucketed tables persist through the Hive
-      // external catalog — the reference's RF:225 semantics — backed by
-      // an embedded Derby metastore in a per-JVM temp dir (same jars a
-      // cluster deployment ships; on a real cluster only the JDO URL
-      // changes to the shared metastore service).
-      .enableHiveSupport()
-      .config("spark.hadoop.javax.jdo.option.ConnectionURL",
-        s"jdbc:derby:;databaseName=${graft.util.Scratch.dir("metastore")}" +
-          "/metastore_db;create=true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // ALWAYS have a checkpoint dir: MLlib's iterative fitters
@@ -98,10 +84,28 @@ object Sessions {
     // lineage via PeriodicRDDCheckpointer when one is set — without it
     // a 200-round boost builds a ~200-deep zipPartitions lineage and
     // dies of StackOverflowError (observed at maxIter=200, sf0.001).
-    // Graft callers that pass an explicit reliable dir (Dedup's
-    // checkpointDir mode) override this per-application default.
+    // Dedup's reliable mode checkpoints here too. The only
+    // setCheckpointDir in the engine: a cluster sets spark.checkpoint.dir
+    // (HDFS/S3) at submit time and this leaves it alone.
     if (spark.sparkContext.getCheckpointDir.isEmpty)
       spark.sparkContext.setCheckpointDir(graft.util.Scratch.dir("ckpt"))
     spark
+  }
+
+  /** Run `f` in a session scoped to one query and re-bind its result to
+    * `spark`. The scoped session is a clone of `spark` — same
+    * SparkContext, cache and SQL conf — with `conf` set on top; its
+    * conf changes and temp views die with it, so the caller's session
+    * is left as it was found. A clone, not `newSession()`: a new
+    * session starts from the context's conf and would drop every
+    * runtime setting of the caller, so the query would stop being a
+    * function of the caller's config. `conf` governs the work `f` does
+    * eagerly (stream drains, checkpoints); the returned frame plans and
+    * runs under the caller's conf, like any other query's. */
+  def scoped(spark: SparkSession, conf: (String, String)*)(
+      f: SparkSession => DataFrame): DataFrame = {
+    val s = SessionBridge.cloneOf(spark)
+    conf.foreach { case (k, v) => s.conf.set(k, v) }
+    SessionBridge.bind(f(s), spark)
   }
 }

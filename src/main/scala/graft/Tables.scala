@@ -39,7 +39,14 @@ object Tables {
     else df
   }
 
-  /** Register all tables as temp views (for spark.sql-based queries). */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    names.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
+  /** Run `sqlText` over the named tables of `sfDir`. The tables are
+    * registered as temp views in a scoped session
+    * ([[Sessions.scoped]]), so the caller's session gains no view and
+    * only the tables the statement reads are loaded. */
+  def sql(spark: SparkSession, sfDir: String, tables: String*)(
+      sqlText: String): DataFrame =
+    Sessions.scoped(spark) { s =>
+      tables.foreach(n => load(s, sfDir, n).createOrReplaceTempView(n))
+      s.sql(sqlText)
+    }
 }

@@ -239,10 +239,10 @@ object Sinks {
     * must equal the plain parquet join. */
   private val j4: Q = (spark, dir) => {
     import spark.implicits._
-    // r13 (guide §2.3): bucket-write only the columns the join + agg
-    // read. The bucketed layout, metastore round-trip, and exchange-free
-    // join are what J4 declares; writing the other 5/12 columns of each
-    // fact was pure write+sort ballast (orders 9 cols → 2, lineitem
+    // Bucket-write only the columns the join + agg read. The bucketed
+    // layout, catalog round-trip, and exchange-free join are what J4
+    // declares; writing the other 5/12 columns of each fact was pure
+    // write+sort ballast (orders 9 cols → 2, lineitem
     // 16 → 2; measured 4.6 → 3.4 s at sf0.1). At warehouse scale the
     // bucket table IS the projection a repeated join consumes.
     Tables.load(spark, dir, "orders")

@@ -141,35 +141,22 @@ object Dedup {
   }
 
   /** Materialize an intermediate for iterative reuse. Local mode (the
-    * default, `checkpointDir = None`) uses `localCheckpoint()` — blocks
-    * live un-replicated in executor storage, the right call when the
-    * executors can't disappear. On a real cluster a lost executor kills
-    * a long iterative run's lineage-free blocks, so callers pass a
-    * reliable `checkpointDir` (HDFS/S3) and get `checkpoint()` — same
-    * values, fault-tolerant materialization (both modes asserted equal
-    * in DedupSpec). Intermediate snapshots are reclaimed by the context
-    * cleaner when their RDDs are GC'd
-    * (`spark.cleaner.referenceTracking.cleanCheckpoints`, set in
-    * [[graft.Sessions]]) — without it every round of an iterative job
-    * leaves a full label-set copy in the checkpoint dir. */
-  private def materialize(df: DataFrame, checkpointDir: Option[String],
+    * default) uses `localCheckpoint()` — blocks live un-replicated in
+    * executor storage, the right call when the executors can't
+    * disappear. On a real cluster a lost executor kills a long
+    * iterative run's lineage-free blocks, so callers pass
+    * `reliable = true` and get `checkpoint()` into the context's
+    * checkpoint dir (set by [[graft.Sessions.local]], or by
+    * `spark.checkpoint.dir` on a cluster) — same values, fault-tolerant
+    * materialization (both modes asserted equal in DedupSpec).
+    * Intermediate snapshots are reclaimed by the context cleaner when
+    * their RDDs are GC'd (`spark.cleaner.referenceTracking
+    * .cleanCheckpoints`, set in [[graft.Sessions]]) — without it every
+    * round of an iterative job leaves a full label-set copy in the
+    * checkpoint dir. */
+  private def materialize(df: DataFrame, reliable: Boolean,
                           eager: Boolean = true): DataFrame =
-    checkpointDir match {
-      case Some(dir) =>
-        val sc = df.sparkSession.sparkContext
-        // setCheckpointDir stores a scheme-qualified UUID SUBDIR of dir,
-        // so no string comparison against getCheckpointDir is reliable
-        // (qualification gives false negatives, substring containment
-        // false positives). Track registration explicitly per
-        // (context, caller dir) instead.
-        val key = sc.applicationId + "|" + dir
-        if (registeredCheckpointDirs.add(key)) sc.setCheckpointDir(dir)
-        df.checkpoint(eager)
-      case None => df.localCheckpoint(eager)
-    }
-
-  private val registeredCheckpointDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    if (reliable) df.checkpoint(eager) else df.localCheckpoint(eager)
 
   /** Ordered-pair expansion of a sorted, distinct id array: every
     * (ids[i], ids[j]) with i < j, as structs (id_a, id_b). Used by both
@@ -354,7 +341,7 @@ object Dedup {
     * candidate pairs — never all-pairs. */
   def simhashDedup(spark: SparkSession, dir: String,
                    maxHamming: Int = 3,
-                   checkpointDir: Option[String] = None): DataFrame = {
+                   reliable: Boolean = false): DataFrame = {
     import spark.implicits._
     val nBlocks = maxHamming + 2
     val base = TextOps.SimHashBits / nBlocks
@@ -369,7 +356,7 @@ object Dedup {
     // re-running the aggregation per consumer (see [[materialize]] for
     // the local-vs-reliable choice).
     val sim = materialize(
-      simhashTable(Tables.load(spark, dir, "documents")), checkpointDir)
+      simhashTable(Tables.load(spark, dir, "documents")), reliable)
     val blockPairs = for {
       a <- 0 until nBlocks; b <- (a + 1) until nBlocks
     } yield (a, b)
@@ -440,9 +427,9 @@ object Dedup {
     * planted long chain (DedupSpec). */
   def connectedComponents(pairs0: DataFrame,
                           maxRounds: Int = 25,
-                          checkpointDir: Option[String] = None): DataFrame = {
+                          reliable: Boolean = false): DataFrame = {
     import pairs0.sparkSession.implicits._
-    def mat(df: DataFrame): DataFrame = materialize(df, checkpointDir)
+    def mat(df: DataFrame): DataFrame = materialize(df, reliable)
     // checkpoint the pairs BEFORE symmetrizing: a union of two selects
     // over the raw plan would materialize the whole pair-generation
     // subtree twice (ReuseExchange saves the shuffles, not the joins).
@@ -467,7 +454,7 @@ object Dedup {
     var changed = true
     var round = 0
     while (changed && round < maxRounds) {
-      val next = materialize(ccRound(edges, labels), checkpointDir,
+      val next = materialize(ccRound(edges, labels), reliable,
         eager = false)
       val nextSum = labelSum(next)
       changed = nextSum.compareTo(lblSum) != 0
@@ -491,10 +478,10 @@ object Dedup {
   def nearDupClusters(spark: SparkSession, dir: String,
                       threshold: Double = 0.8,
                       maxRounds: Int = 25,
-                      checkpointDir: Option[String] = None): DataFrame = {
+                      reliable: Boolean = false): DataFrame = {
     import spark.implicits._
     val labels = connectedComponents(
-      ngramJaccard(spark, dir, threshold), maxRounds, checkpointDir)
+      ngramJaccard(spark, dir, threshold), maxRounds, reliable)
     Tables.load(spark, dir, "documents").select($"doc_id")
       .join(labels.select($"id".as("doc_id"), $"lbl".as("canonical_id")),
         Seq("doc_id"), "left_outer")
@@ -516,10 +503,10 @@ object Dedup {
   def canonicalKeep(spark: SparkSession, dir: String,
                     threshold: Double = 0.8,
                     maxRounds: Int = 25,
-                    checkpointDir: Option[String] = None): DataFrame = {
+                    reliable: Boolean = false): DataFrame = {
     import spark.implicits._
     val labels = connectedComponents(
-      ngramJaccard(spark, dir, threshold), maxRounds, checkpointDir)
+      ngramJaccard(spark, dir, threshold), maxRounds, reliable)
     Tables.load(spark, dir, "documents").select($"doc_id", $"n_chars")
       .join(labels.select($"id".as("doc_id"), $"lbl"), Seq("doc_id"),
         "left_outer")
@@ -540,10 +527,10 @@ object Dedup {
   def simhashClusters(spark: SparkSession, dir: String,
                       maxHamming: Int = 3,
                       maxRounds: Int = 25,
-                      checkpointDir: Option[String] = None): DataFrame = {
+                      reliable: Boolean = false): DataFrame = {
     import spark.implicits._
     val labels = connectedComponents(
-      simhashDedup(spark, dir, maxHamming, checkpointDir), maxRounds, checkpointDir)
+      simhashDedup(spark, dir, maxHamming, reliable), maxRounds, reliable)
     Tables.load(spark, dir, "documents").select($"doc_id")
       .join(labels.select($"id".as("doc_id"), $"lbl".as("canonical_id")),
         Seq("doc_id"), "left_outer")
@@ -607,10 +594,10 @@ object Dedup {
   def embeddingClusters(spark: SparkSession, dir: String,
                         threshold: Double = 0.30,
                         maxRounds: Int = 25,
-                        checkpointDir: Option[String] = None): DataFrame = {
+                        reliable: Boolean = false): DataFrame = {
     import spark.implicits._
     val labels = connectedComponents(
-      embeddingNearDupLsh(spark, dir, threshold), maxRounds, checkpointDir)
+      embeddingNearDupLsh(spark, dir, threshold), maxRounds, reliable)
     Tables.load(spark, dir, "embeddings").select($"vec_id")
       .join(labels.select($"id".as("vec_id"), $"lbl".as("canonical_id")),
         Seq("vec_id"), "left_outer")

@@ -926,7 +926,7 @@ object Similarity {
     * sub, code, d)` CTE 8 times onto the codes table; behind a CTE
     * pipeline DuckDB's optimizer has EC≈0/1 estimates and picked a
     * cross-product join order for the self-joins (>32 min / 115 GB RSS
-    * at sf0.01 — it emptied the driver's whole CORRECTNESS_r11 gate).
+    * at sf0.01 — it stalled the whole oracle gate).
     * The list spelling is the judge's recommended fix (VERDICT r11
     * Next #1b): zero dt joins, so the optimizer has no join order to
     * get wrong. Entry s·16 + code + 1 is the sub-s distance for `code`;
@@ -1130,8 +1130,8 @@ object Similarity {
          |SELECT query_id, neighbor_id, cosine, rank FROM r WHERE rank <= $TopK""".stripMargin,
 
     // Same join-free ADC + MATERIALIZED staging as sim_topk_pq — this
-    // was the second of the two dt-join bomb oracles that emptied
-    // CORRECTNESS_r11.json. `dt` carries one 128-entry residual
+    // was the second of the two dt-join bomb oracles that stalled the
+    // oracle gate. `dt` carries one 128-entry residual
     // distance list per (query, probed list); `sc` is a single
     // list_id equi-join, nothing for the optimizer to misorder.
     "sim_topk_ivfpq_cached" ->

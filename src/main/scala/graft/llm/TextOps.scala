@@ -460,7 +460,7 @@ object TextOps {
     // compute a value each row already holds: max multiplicity = the
     // longest equal-run in the doc's SORTED bigram array, a linear
     // HOF fold after array_sort. The whole query is now map-side
-    // (zero Exchange — plans/r13/d_repetition_*). Initial prev = ""
+    // (zero Exchange). Initial prev = ""
     // is unreachable (a bigram always contains the separator space),
     // and an empty bigram list yields share 0.0 exactly like the old
     // left-join + na.fill path.

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.ml.{Pipeline, PipelineModel, PipelineStage}
 import org.apache.spark.ml.classification.{FMClassifier, GBTClassifier, LogisticRegression, RandomForestClassifier}
 import org.apache.spark.ml.feature.{OneHotEncoder, StandardScaler, StringIndexer, VectorAssembler}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -185,34 +186,21 @@ object ChurnML {
     new Pipeline().setStages(stages.toArray)
   }
 
-  /** Once-per-process materialized wide table, keyed by sfDir — the
-    * reference's OWN architecture: RF:225 `saveAsTable`s the label+
-    * feature table and the training job reads it back (RF:20-21), so
-    * the feature pipeline is paid once while five model families train
-    * from the stored table. Before r11 every ml_* invocation (×2 bench
-    * passes) rebuilt the 18-join wide table from the fact scans —
-    * 12 assemblies per bench run for one deterministic table (VERDICT
-    * r10 #7: the gbt pair alone was 14% of the bench). A DISK artifact
-    * (scratch parquet), not a cache pin, so Bench's per-pass blanket
-    * unpersist can't drop it. Coalesced before the write so the
-    * read-back arrives volume-sized (the partition-sizing note in
-    * [[trainEval]]); read-back row order is parquet-file order —
-    * deterministic, so seeded randomSplit membership (and every emitted
-    * metric) is identical across invocations within a process. */
-  private val wideMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  def wideFrame(spark: SparkSession, sfDir: String): DataFrame = {
-    val path = wideMemo.computeIfAbsent(sfDir, _ => {
-      val p = graft.util.Scratch.dir(
-        s"ml-wide-${Integer.toHexString(sfDir.hashCode)}")
-      Churn.wideTable(spark, sfDir)
-        .withColumn("label", col("label").cast("double"))
-        .coalesce(math.max(2, spark.sparkContext.defaultParallelism / 4))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    spark.read.parquet(path)
-  }
+  /** The labeled wide table (label cast to double), lazy. Every call
+    * builds it from the sf tables; callers that read it more than once
+    * materialize it for the duration of the call ([[trainEval]],
+    * [[crossValidateOn]]), so the result is a function of the data
+    * alone — nothing outlives the call. Hash-repartitioned on
+    * USR_NUM_ID to volume-sized partitions (the partition-sizing note
+    * in [[trainEval]]): seeded `randomSplit` sorts within partitions,
+    * so a key-hash layout makes split membership — and every emitted
+    * metric — independent of the join's shuffle layout (the same rule
+    * as MLChurnSpec's planted table). */
+  def wideFrame(spark: SparkSession, sfDir: String): DataFrame =
+    Churn.wideTable(spark, sfDir)
+      .withColumn("label", col("label").cast("double"))
+      .repartition(math.max(2, spark.sparkContext.defaultParallelism / 4),
+        col("USR_NUM_ID"))
 
   /** O3 + M7 + E1-E3 end-to-end: split the wide table 80/20 (seed 123 =
     * churn_xgb4j_spark.scala:20), fit, persist + reload the PipelineModel
@@ -226,16 +214,16 @@ object ChurnML {
     // shuffle partitioning, but the per-user result is ~1000× smaller
     // than the fact — iterative fitters (16 indexer passes, 50-200
     // boosting rounds) then pay scheduler overhead per tiny task, so
-    // the memoized write above coalesces to volume-sized partitions.
+    // wideFrame repartitions to volume-sized partitions.
     // (At warehouse scale the same rule sizes partitions to the
     // AGGREGATED volume, not the input's.)
-    val wide = wideFrame(spark, sfDir)
-    // Cache the PARENT too: test is scored lazily after the fit, and an
-    // uncached wide table would be recomputed from the fact scans for
-    // the scoring pass (train.cache alone only covers the fit's side of
-    // the split). Volume-sized — pennies of memory, one wide build
-    // instead of two.
-    wide.cache()
+    // Materialized ONCE per call, lineage-free: test is scored lazily
+    // after the fit, so an unmaterialized wide table would be rebuilt
+    // from the fact scans for scoring; and a cache() would keep the
+    // wide table's physical plan (its broadcast relations) reachable
+    // through the whole fit (churn_train's post-GC heap peak: 196-209 MB
+    // with cache(), 168 MB with this). Volume-sized — pennies of memory.
+    val wide = wideFrame(spark, sfDir).localCheckpoint()
     val (aucV, rep, nTrain, nTest) = try {
       val Array(train, test) = wide.randomSplit(Array(0.8, 0.2), seed = 123L) // O3
       train.cache() // mirrors RF:235 — indexer fit + tree passes reuse it
@@ -275,7 +263,10 @@ object ChurnML {
           nTrain, pred.count())                                      // E1, E2
         finally pred.unpersist()
       } finally train.unpersist()
-    } finally wide.unpersist()
+    } finally wide.queryExecution.logical match {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
 
     // config column: make the fitted hyperparameters part of the emitted
     // row so a bench reader can't mistake the budget-scaled GBT round

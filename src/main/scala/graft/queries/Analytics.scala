@@ -57,13 +57,21 @@ object Analytics {
   private def pinKeyed(df: DataFrame, key: String, dedupKeys: Seq[String],
                        dir: String,
                        ser: org.apache.spark.storage.StorageLevel)
-      : DataFrame = {
-    val spark = df.sparkSession
+      : DataFrame =
     if (graft.util.Storage.factBytes(dir) <= (64L << 20)) {
       val deduped =
         if (dedupKeys.isEmpty) df else df.dropDuplicates(dedupKeys)
-      return deduped.localCheckpoint(true, ser)
-    }
+      deduped.localCheckpoint(true, ser)
+    } else pinByKey(df, key, dedupKeys, ser)
+
+  /** The keyed branch of [[pinKeyed]]: hash-partition on `key`, dedup,
+    * sort within partitions, eager localCheckpoint. The result carries
+    * HashPartitioning(key, n) + [key ASC] in its LogicalRDD. */
+  private[graft] def pinByKey(df: DataFrame, key: String,
+                              dedupKeys: Seq[String],
+                              ser: org.apache.spark.storage.StorageLevel)
+      : DataFrame = {
+    val spark = df.sparkSession
     // Explicit partition count: an unnumbered repartition(col) is an AQE
     // coalescing candidate, and a coalesced read would checkpoint with
     // weaker partitioning info — the whole point here is a determinate
@@ -77,17 +85,16 @@ object Analytics {
     // executed plan is an AdaptiveSparkPlanExec whose outputPartitioning
     // reports Unknown, so LogicalRDD would checkpoint WITHOUT the
     // partitioning/ordering it just paid a shuffle + sort to establish
-    // (verified empirically: hashpartitioning(key, n) + [key ASC] with
-    // this toggle, UnknownPartitioning(0) without — and with it every
+    // (hashpartitioning(key, n) + [key ASC] with AQE off,
+    // UnknownPartitioning(0) with it on — and with it off every
     // per-round SMJ consumes the edge scan with zero Exchange/Sort).
     // Build-side AQE loses nothing here: the pipeline is a controlled
     // two-shuffle layout with bounded per-key fanout (≤ items/order).
-    // Queries build sequentially, so the session-conf flip can't race.
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val prev = spark.conf.get(aqeKey)
-    spark.conf.set(aqeKey, "false")
-    try laid.localCheckpoint(true, ser)
-    finally spark.conf.set(aqeKey, prev)
+    // The checkpoint runs in a scoped session, so the caller's AQE
+    // setting is never touched and the checkpointed frame returns to
+    // the caller's session.
+    graft.Sessions.scoped(spark, "spark.sql.adaptive.enabled" -> "false")(s =>
+      org.apache.spark.sql.SessionBridge.bind(laid, s).localCheckpoint(true, ser))
   }
 
   // ---- ev_cohort_retention: the classic signup-cohort × week-offset

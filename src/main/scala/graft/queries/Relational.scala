@@ -51,14 +51,12 @@ object Relational {
   }
 
   // ---- J1: SQL left outer join, aliased, predicates both sides (RF:47-51)
-  private val j1: Q = (spark, dir) => {
-    Tables.registerAll(spark, dir)
-    spark.sql(
+  private val j1: Q = (spark, dir) =>
+    Tables.sql(spark, dir, "lineitem", "part")(
       """SELECT a.l_orderkey, a.l_partkey, b.p_brand, b.p_type,
         |       a.l_quantity
         |FROM lineitem a LEFT JOIN part b ON a.l_partkey = b.p_partkey
         |WHERE a.l_quantity > 45""".stripMargin)
-  }
 
   // ---- J2: left-deep chain of same-key left_outer joins (RF:170-198)
   private val j2: Q = (spark, dir) => {
@@ -935,16 +933,14 @@ object Relational {
   // rollup/cube, and a declared query should use the surface a user
   // would. grouping() disambiguates "subtotal row" from "NULL-valued
   // group", which any consumer of subtotal output needs.
-  private val a14: Q = (spark, dir) => {
-    Tables.registerAll(spark, dir)
-    spark.sql(
+  private val a14: Q = (spark, dir) =>
+    Tables.sql(spark, dir, "orders")(
       """SELECT o_orderstatus, o_orderpriority,
         |       CAST(grouping(o_orderstatus) AS BIGINT) AS g_status,
         |       CAST(grouping(o_orderpriority) AS BIGINT) AS g_prio,
         |       COUNT(*) AS n
         |FROM orders
         |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())""".stripMargin)
-  }
 
   // ---- T5 (extension): calendar gap-fill — densify per-user daily
   // activity onto a fixed date spine so downstream sequence models see

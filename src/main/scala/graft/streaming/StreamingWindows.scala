@@ -452,7 +452,7 @@ object StreamingWindows {
     * the DuckDB oracle spells. Proves the streaming twin end-to-end
     * (state fold, timeout emission, watermark arithmetic), not just
     * in a unit test. */
-  private val stSessionize: Q = (spark, dir) => withStateParts(spark, dir) {
+  private val stSessionize: Q = (spark, dir) => withStateParts(spark, dir) { spark =>
     // sessions are FACT-SCALE (9.5M rows at the sf10 probe) → file
     // sink; the memory-sink + localCheckpoint spelling this replaced
     // still pinned the full emitted set on the driver heap once per
@@ -467,8 +467,7 @@ object StreamingWindows {
     * per-user row with max (ts, event_id) — equal, by the latest-wins
     * contract, to the batch "current row per user", which the oracle
     * recomputes directly. */
-  private val stLatestState: Q = (spark, dir) => withStateParts(spark, dir) {
-    spark.catalog.dropTempView("st_latest_mem")
+  private val stLatestState: Q = (spark, dir) => withStateParts(spark, dir) { spark =>
     val emitted = runToCompletion(spark,
       latestState(spark, readAllEventStream(spark, s"$dir/events.parquet")),
       "st_latest_mem", OutputMode.Update())
@@ -490,8 +489,7 @@ object StreamingWindows {
     * makes the boundary land ON a window end). The still-open windows
     * are withheld state, not lost rows — the same finalization contract
     * st_sessionize pins for session windows. */
-  private val stTumbling: Q = (spark, dir) => withStateParts(spark, dir) {
-    spark.catalog.dropTempView("st_tumb_mem")
+  private val stTumbling: Q = (spark, dir) => withStateParts(spark, dir) { spark =>
     val out = runToCompletion(spark,
       tumbling(readAllEventStream(spark, s"$dir/events.parquet")),
       "st_tumb_mem", OutputMode.Append())
@@ -513,46 +511,40 @@ object StreamingWindows {
     * third stateful-operator class (two-sided join state) end-to-end,
     * after aggregation state (st_tumbling/st_sessionize) and keyed
     * update state (st_latest_state). */
-  /** Run `f` with `spark.sql.shuffle.partitions` sized to the STREAM
-    * STATE volume rather than the session's batch default (r13, VERDICT
-    * r12 #2): a stream-stream join keeps 4 state stores per partition
-    * (two per side), and every micro-batch pays each store's
+  /** Run a stateful drain with `spark.sql.shuffle.partitions` sized to
+    * the STREAM STATE volume rather than the session's batch default:
+    * every stateful operator keeps one state store per partition (a
+    * stream-stream join four), and every micro-batch pays each store's
     * load/commit lifecycle — with 40 k state rows at sf0.1, a 32-way
-    * layout spends more on 256 store lifecycles than on the join
-    * (measured: 8-10 s at 32 parts vs 3.7-4.0 s at 8, either provider).
-    * Partitions therefore track the event volume (≈ state volume for a
-    * one-batch drain), floored at 8 and capped at the session default —
-    * at sf10 the cap restores full parallelism, and on a real cluster
-    * the cap is the configured executor fan-out. The count is read at
-    * query start against a FRESH checkpoint each drain, so it is free
-    * to differ per corpus; the emitted set is partition-invariant.
+    * layout spends more on store lifecycles than on the operator
+    * (measured on the interval join: 8-10 s at 32 parts vs 3.7-4.0 s at
+    * 8, either provider). Partitions therefore track the event volume
+    * (≈ state volume for a one-batch drain), floored at 8 and capped at
+    * the session default — min(prev, max(8, volume)), so a session
+    * configured below 8 is never raised above its own cap; at sf10 the
+    * cap restores full parallelism, and on a real cluster the cap is
+    * the configured executor fan-out. A non-numeric session value falls
+    * back to the scheduler's parallelism. The count is read at query
+    * start against a FRESH checkpoint each drain, so it is free to
+    * differ per corpus; the emitted set is partition-invariant.
+    * Stateless drains (st_enrich, st_index_update) are NOT wrapped: no
+    * store, and shrinking their partitions would only serialize the
+    * file-sink write.
     *
-    * r13 optimization round: extended from the two interval joins to
-    * EVERY stateful drain (tumbling/sliding/session aggregates, keyed
-    * update/fold state, dedup store) — each keeps one store per
-    * partition and pays the same load/commit lifecycle per micro-batch,
-    * so a 32-way layout on ~40k state rows spends its wall on 32–64
-    * RocksDB lifecycles exactly as the joins did on 256. Stateless
-    * drains (st_enrich, st_index_update) are NOT wrapped: no store, and
-    * shrinking their partitions would only serialize the file-sink
-    * write. */
-  private def withStateParts[T](spark: SparkSession, dir: String)(f: => T): T = {
+    * `f` runs in a [[graft.Sessions.scoped]] session carrying the
+    * count, so the caller's conf is never flipped; the drains register
+    * their memory-sink views there, never in the caller's session. */
+  private def withStateParts(spark: SparkSession, dir: String)(
+      f: SparkSession => DataFrame): DataFrame = {
     val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
     val evBytes = graft.util.Storage.factBytes(dir, "events")
-    // Defensive parse + floor-vs-cap order (ADVICE r13): a non-numeric
-    // session value falls back to the scheduler's parallelism instead
-    // of throwing, and the 8-floor applies only UP TO the session
-    // default — min(prev, max(8, volume)) — so a session configured
-    // below 8 partitions is never silently raised above its own cap.
-    val prevL = prev.toLongOption
+    val prevL = spark.conf.get(key).toLongOption
       .getOrElse(spark.sparkContext.defaultParallelism.toLong)
     val parts = math.min(prevL, math.max(8L, evBytes / (2L << 20)))
-    spark.conf.set(key, parts.toString)
-    try f finally spark.conf.set(key, prev)
+    graft.Sessions.scoped(spark, key -> parts.toString)(f)
   }
 
-  private val stRangeJoin: Q = (spark, dir) => withStateParts(spark, dir) {
+  private val stRangeJoin: Q = (spark, dir) => withStateParts(spark, dir) { spark =>
     val ev = readAllEventStream(spark, s"$dir/events.parquet")
     val joined = streamStreamRangeJoin(
       ev.filter(col("event_type") === "purchase"),
@@ -572,7 +564,7 @@ object StreamingWindows {
     * boundary are still "maybe matchable" when the drain ends and are
     * deliberately NOT emitted (they'd emit on the next batch of a real
     * continuous run). */
-  private val stLeftJoin: Q = (spark, dir) => withStateParts(spark, dir) {
+  private val stLeftJoin: Q = (spark, dir) => withStateParts(spark, dir) { spark =>
     val ev = readAllEventStream(spark, s"$dir/events.parquet")
     val joined = streamStreamLeftJoin(
       ev.filter(col("event_type") === "purchase"),
@@ -619,7 +611,7 @@ object StreamingWindows {
     * out-of-order tests, while this drain pins the visible contract.
     * Emitted set is FACT-SCALE (one row per distinct event) → file
     * sink. */
-  private val stDedup: Q = (spark, dir) => withStateParts(spark, dir) {
+  private val stDedup: Q = (spark, dir) => withStateParts(spark, dir) { spark =>
     val once = readAllEventStream(spark, s"$dir/events.parquet")
     val redelivered = once.unionAll(
       readAllEventStream(spark, s"$dir/events.parquet"))
@@ -696,8 +688,7 @@ object StreamingWindows {
     * watermark passes ITS end, so the drained set is the 4×-overlapped
     * window table cut by the same non-strict boundary predicate the
     * tumbling oracle pins). */
-  private val stSliding: Q = (spark, dir) => withStateParts(spark, dir) {
-    spark.catalog.dropTempView("st_slide_mem")
+  private val stSliding: Q = (spark, dir) => withStateParts(spark, dir) { spark =>
     val out = runToCompletion(spark,
       sliding(readAllEventStream(spark, s"$dir/events.parquet")),
       "st_slide_mem", OutputMode.Append())
@@ -715,8 +706,7 @@ object StreamingWindows {
     * batch reader each user emits once; the max-n compaction makes the
     * contract explicit under any batching. Oracle = the batch
     * count/max — exact because state holds µs, not getTime millis. */
-  private val stRunningCounts: Q = (spark, dir) => withStateParts(spark, dir) {
-    spark.catalog.dropTempView("st_runcnt_mem")
+  private val stRunningCounts: Q = (spark, dir) => withStateParts(spark, dir) { spark =>
     val emitted = runToCompletion(spark,
       runningCounts(spark, readAllEventStream(spark, s"$dir/events.parquet")),
       "st_runcnt_mem", OutputMode.Update())

@@ -294,23 +294,29 @@ class DedupSpec extends SparkSpec {
 
   /** The reliable-checkpoint mode (for real clusters, where a lost
     * executor kills localCheckpoint's un-replicated blocks mid-iteration)
-    * must be a pure materialization-strategy switch: same rows. */
+    * must be a pure materialization-strategy switch: same rows, written
+    * into the context's own checkpoint dir. */
   test("reliable checkpointDir mode matches localCheckpoint mode exactly") {
     import spark.implicits._
-    val ckpt = Files.createTempDirectory("dedup-ckpt").toString
+    val ckpt = new java.io.File(new java.net.URI(
+      spark.sparkContext.getCheckpointDir.get))
+    def rddDirs = ckpt.listFiles().map(_.getName).filter(_.startsWith("rdd-")).toSet
+    val before = rddDirs
     val localClusters = Dedup.nearDupClusters(spark, dir, threshold = 0.5)
       .as[(Long, Long)].collect().toMap
     val reliableClusters = Dedup.nearDupClusters(spark, dir, threshold = 0.5,
-        checkpointDir = Some(ckpt))
+        reliable = true)
       .as[(Long, Long)].collect().toMap
     assert(reliableClusters == localClusters)
     val localSim = Dedup.simhashDedup(spark, dir)
       .as[(Long, Long, Long)].collect().toSet
-    val reliableSim = Dedup.simhashDedup(spark, dir, checkpointDir = Some(ckpt))
-      .as[(Long, Long, Long)].collect().toSet
+    val reliableSimDf = Dedup.simhashDedup(spark, dir, reliable = true)
+    val reliableSim = reliableSimDf.as[(Long, Long, Long)].collect().toSet
     assert(reliableSim == localSim)
-    // the reliable mode really wrote RDD checkpoint files
-    assert(new java.io.File(ckpt).listFiles().nonEmpty)
+    // the reliable mode really wrote RDD checkpoint files (the live
+    // frame's checkpoint cannot have been cleaned yet)
+    assert((rddDirs -- before).nonEmpty)
+    assert(reliableSimDf.count() == reliableSim.size)
   }
 
   test("incremental dedup equals the full pass restricted to new-batch pairs") {
