@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SessionBridge, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryListenerBus
 
 /** The ONE SparkSession builder for every graft main (Verify, Bench) and
   * test suite: a main or suite with its own builder drifts from this
@@ -101,11 +102,25 @@ object Sessions {
     * runtime setting of the caller, so the query would stop being a
     * function of the caller's config. `conf` governs the work `f` does
     * eagerly (stream drains, checkpoints); the returned frame plans and
-    * runs under the caller's conf, like any other query's. */
+    * runs under the caller's conf, like any other query's.
+    *
+    * A clone that starts a stream adds a StreamingQueryListenerBus to
+    * the context's listener bus, and Spark never removes it (the context
+    * cleaner drops only ExecutionListenerBuses), so it would receive
+    * every later event for the life of the JVM. The stream buses added
+    * while `f` ran are removed once it returns, when its streams have
+    * stopped. That diff would also remove the bus of a concurrent scoped
+    * stream on the same context. */
   def scoped(spark: SparkSession, conf: (String, String)*)(
       f: SparkSession => DataFrame): DataFrame = {
+    val before = SessionBridge.listeners(spark).toSet
     val s = SessionBridge.cloneOf(spark)
     conf.foreach { case (k, v) => s.conf.set(k, v) }
-    SessionBridge.bind(f(s), spark)
+    try SessionBridge.bind(f(s), spark)
+    finally SessionBridge.listeners(spark).foreach {
+      case b: StreamingQueryListenerBus if !before(b) =>
+        spark.sparkContext.removeSparkListener(b)
+      case _ =>
+    }
   }
 }

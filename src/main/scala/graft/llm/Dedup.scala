@@ -200,49 +200,58 @@ object Dedup {
                    threshold: Double = 0.8,
                    maxShingleDf: Long = 100L): DataFrame = {
     import spark.implicits._
-    val sh = docShingles(spark, dir)
-    // Posting lists instead of an inverted-index self-join: group the
-    // postings once on the 48-bit shingle hash, emit each list's ordered
-    // pairs map-side, and count pairs. One grouping + one pair-count
-    // shuffle vs. shuffle-join + pair-count (measured ~2× on sf0.1). The
-    // df cap bounds the per-list pair blowup (skew guard): a shingle in
-    // d docs emits d(d-1)/2 pairs. array_distinct guards the rare case
-    // of two distinct shingles of ONE doc colliding on the 48-bit hash —
-    // without it the expansion could emit a self-pair (id_a == id_b).
-    //
-    // r13 (guide §2.3/§2.4): the posting entry CARRIES the doc's shingle
-    // count as struct(doc_id, n) — n rides the existing postings shuffle
-    // (8 bytes/entry) and the Jaccard denominator is available the
-    // moment a pair is counted. The previous spelling joined the pair
-    // table against a (doc_id, n) side TWICE, and each join side
-    // re-scanned + re-tokenized + re-shingled the documents table (plan:
-    // 2 extra parquet scans + 2 BroadcastExchanges + 2 joins — the
-    // tokenize pass is the expensive part, not the join). Struct order
-    // (doc_id first) keeps sort_array/least/greatest semantics identical
-    // to the plain-id spelling, and n is a function of doc_id, so
-    // grouping on (id, n) pairs cannot merge or split any group.
-    val posts = sh.select($"doc_id", size($"sh").as("n"), explode($"sh").as("tok0"))
-      .select(struct($"doc_id", $"n").as("dn"), hash48($"tok0").as("tok"))
-      .groupBy($"tok").agg(sort_array(array_distinct(collect_list($"dn"))).as("ids"))
-      .filter(size($"ids").between(2, maxShingleDf))
-    pairs(posts)
-      .withColumn("jaccard",
-        $"inter".cast("double") / ($"n_a" + $"n_b" - $"inter"))
+    countPairs(sizedPostings(spark, dir, maxShingleDf)
+        .select(explode(orderedPairs($"ids")).as("p")))
+      .withColumn("jaccard", pairJaccard)
       .filter($"jaccard" >= threshold)
       .select($"id_a", $"id_b", $"jaccard")
   }
 
-  /** Ordered-pair expansion + count over struct(doc_id, n) posting lists
-    * → (id_a, n_a, id_b, n_b, inter). Shared by [[ngramJaccard]] /
-    * [[containment]] so the carried-size spelling cannot drift. */
-  private def pairs(posts: DataFrame): DataFrame = {
-    import posts.sparkSession.implicits._
-    posts
-      .select(explode(orderedPairs($"ids")).as("p"))
-      .groupBy($"p.id_a.doc_id".as("id_a"), $"p.id_a.n".as("n_a"),
-        $"p.id_b.doc_id".as("id_b"), $"p.id_b.n".as("n_b"))
-      .agg(count(lit(1)).as("inter"))
+  /** Shingle posting lists, the one build behind [[ngramJaccard]],
+    * [[containment]] and [[ngramJaccardIncremental]]: (tok, ids) with
+    * ids the sorted struct(doc_id, n) entries of every doc holding the
+    * 48-bit shingle hash tok, n being the doc's shingle count, kept when
+    * 2 ≤ |ids| ≤ maxShingleDf.
+    *
+    * Posting lists instead of an inverted-index self-join: the postings
+    * group once on the shingle hash, each list's ordered pairs are
+    * emitted map-side, and pairs are counted — one grouping + one
+    * pair-count shuffle vs. shuffle-join + pair-count (measured ~2× on
+    * sf0.1). The df cap bounds the per-list pair blowup (skew guard): a
+    * shingle in d docs emits d(d-1)/2 pairs. array_distinct guards the
+    * rare case of two distinct shingles of ONE doc colliding on the
+    * 48-bit hash — without it the expansion could emit a self-pair
+    * (id_a == id_b).
+    *
+    * The entry CARRIES n so the Jaccard/containment denominator rides the
+    * postings shuffle (8 bytes/entry) and is at hand the moment a pair is
+    * counted; joining the pair table to a (doc_id, n) side instead costs
+    * two more document scans, each re-tokenizing and re-shingling the
+    * table. Struct order (doc_id first) keeps sort_array/least/greatest
+    * semantics identical to the plain-id spelling, and n is a function
+    * of doc_id, so grouping on (id, n) pairs cannot merge or split any
+    * group. */
+  private def sizedPostings(spark: SparkSession, dir: String,
+                            maxShingleDf: Long): DataFrame = {
+    import spark.implicits._
+    docShingles(spark, dir)
+      .select($"doc_id", size($"sh").as("n"), explode($"sh").as("tok0"))
+      .select(struct($"doc_id", $"n").as("dn"), hash48($"tok0").as("tok"))
+      .groupBy($"tok").agg(sort_array(array_distinct(collect_list($"dn"))).as("ids"))
+      .filter(size($"ids").between(2, maxShingleDf))
   }
+
+  /** Shared-shingle count per candidate pair: `pairs` holds one row per
+    * (pair, shared shingle) as p = struct(id_a, id_b) of [[sizedPostings]]
+    * entries → (id_a, n_a, id_b, n_b, inter). */
+  private def countPairs(pairs: DataFrame): DataFrame =
+    pairs.groupBy(col("p.id_a.doc_id").as("id_a"), col("p.id_a.n").as("n_a"),
+        col("p.id_b.doc_id").as("id_b"), col("p.id_b.n").as("n_b"))
+      .agg(count(lit(1)).as("inter"))
+
+  /** Jaccard of a [[countPairs]] row: inter / |a ∪ b|. */
+  private def pairJaccard: Column =
+    col("inter").cast("double") / (col("n_a") + col("n_b") - col("inter"))
 
   /** Shingle CONTAINMENT — the doc-in-doc detector Jaccard misses: a
     * short doc quoted whole inside a long one has inter ≈ |small| but
@@ -258,22 +267,14 @@ object Dedup {
                   threshold: Double = 0.8,
                   maxShingleDf: Long = 100L): DataFrame = {
     import spark.implicits._
-    val sh = docShingles(spark, dir)
-    // Same carried-size postings as [[ngramJaccard]] (r13): n rides the
-    // posting struct, killing the two size joins + their re-tokenizing
-    // document scans.
-    val posts = sh.select($"doc_id", size($"sh").as("n"), explode($"sh").as("tok0"))
-      .select(struct($"doc_id", $"n").as("dn"), hash48($"tok0").as("tok"))
-      .groupBy($"tok").agg(sort_array(array_distinct(collect_list($"dn"))).as("ids"))
-      .filter(size($"ids").between(2, maxShingleDf))
-    pairs(posts)
+    countPairs(sizedPostings(spark, dir, maxShingleDf)
+        .select(explode(orderedPairs($"ids")).as("p")))
       .withColumn("containment",
         $"inter".cast("double") / least($"n_a", $"n_b"))
       .filter($"containment" >= threshold)
       .select($"id_a", $"id_b",
         when($"n_a" <= $"n_b", $"id_a").otherwise($"id_b").as("contained_id"),
-        $"inter", $"containment",
-        ($"inter".cast("double") / ($"n_a" + $"n_b" - $"inter")).as("jaccard"))
+        $"inter", $"containment", pairJaccard.as("jaccard"))
   }
 
   /** MinHash + LSH banding near-dup: signatures (TextOps.minhashSig) →
@@ -552,18 +553,12 @@ object Dedup {
                               threshold: Double = 0.8,
                               maxShingleDf: Long = 100L): DataFrame = {
     import spark.implicits._
-    val sh = docShingles(spark, dir)
     // df (the cap) stays corpus-wide — the skew guard must see the true
-    // list size, not the batch's slice of it. Postings carry
-    // struct(doc_id, n) like [[ngramJaccard]] (r13): the predicate reads
-    // the struct's doc_id, least/greatest order structs by their first
-    // field (= doc_id, n being functional on it), so pair identity and
-    // ordering are unchanged while the two size joins + their
-    // re-tokenizing scans disappear.
-    val posts = sh.select($"doc_id", size($"sh").as("n"), explode($"sh").as("tok0"))
-      .select(struct($"doc_id", $"n").as("dn"), hash48($"tok0").as("tok"))
-      .groupBy($"tok").agg(sort_array(array_distinct(collect_list($"dn"))).as("ids"))
-      .filter(size($"ids").between(2, maxShingleDf))
+    // list size, not the batch's slice of it. The predicate reads the
+    // posting struct's doc_id, and least/greatest order structs by their
+    // first field (= doc_id, n being functional on it), so pair identity
+    // and ordering are those of plain-id postings.
+    val posts = sizedPostings(spark, dir, maxShingleDf)
       .withColumn("news", filter($"ids", x => isNew(x.getField("doc_id"))))
       .filter(size($"news") >= 1)
       .withColumn("olds", filter($"ids", x => !isNew(x.getField("doc_id"))))
@@ -575,12 +570,8 @@ object Dedup {
           struct(least(o, nw).as("id_a"), greatest(o, nw).as("id_b")))))).as("p"))
     val newPairs = posts.filter(size($"news") >= 2)
       .select(explode(orderedPairs($"news")).as("p"))
-    crossPairs.unionAll(newPairs)
-      .groupBy($"p.id_a.doc_id".as("id_a"), $"p.id_a.n".as("n_a"),
-        $"p.id_b.doc_id".as("id_b"), $"p.id_b.n".as("n_b"))
-      .agg(count(lit(1)).as("inter"))
-      .withColumn("jaccard",
-        $"inter".cast("double") / ($"n_a" + $"n_b" - $"inter"))
+    countPairs(crossPairs.unionAll(newPairs))
+      .withColumn("jaccard", pairJaccard)
       .filter($"jaccard" >= threshold)
       .select($"id_a", $"id_b", $"jaccard")
   }
@@ -634,9 +625,8 @@ object Dedup {
   def semDedup(spark: SparkSession, dir: String,
                threshold: Double = 0.30): DataFrame = {
     import spark.implicits._
-    val cents = spark.read.parquet(AnnIndex.ensureSemPath(spark, dir))
-    val e = Tables.load(spark, dir, "embeddings")
-      .select($"vec_id", transform($"embedding", x => x.cast("double")).as("v"))
+    val cents = AnnIndex.semCents(spark, dir)
+    val e = Similarity.emb(spark, dir)
     // ‖v−c‖² spelled ‖v‖² + ‖c‖² − 2·v·c: the norms fold ONCE per
     // vector/centroid (interpreted HOF, but n + k rows, not n·k) and
     // the per-pair work is the CODEGEN'D dot — the direct (x−c)² fold
@@ -703,8 +693,7 @@ object Dedup {
   def embeddingNearDup(spark: SparkSession, dir: String,
                        threshold: Double = 0.30): DataFrame = {
     import spark.implicits._
-    val e = Tables.load(spark, dir, "embeddings")
-      .select($"vec_id", transform($"embedding", x => x.cast("double")).as("v"))
+    val e = Similarity.emb(spark, dir)
     val probe = e.filter($"vec_id" < Similarity.NumQueryVecs)
       .select($"vec_id".as("id_a"), $"v".as("va"))
     // probe ids are the K smallest, so id_a < id_b covers every pair
@@ -744,8 +733,7 @@ object Dedup {
       .select(explode(orderedPairs($"ids")).as("p"))
       .select($"p.id_a".as("id_a"), $"p.id_b".as("id_b"))
       .distinct()
-    val e = Tables.load(spark, dir, "embeddings")
-      .select($"vec_id", transform($"embedding", x => x.cast("double")).as("v"))
+    val e = Similarity.emb(spark, dir)
     cand
       .join(e.select($"vec_id".as("id_a"), $"v".as("va")), Seq("id_a"))
       .join(e.select($"vec_id".as("id_b"), $"v".as("vb")), Seq("id_b"))

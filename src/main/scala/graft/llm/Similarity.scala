@@ -89,11 +89,32 @@ object Similarity {
       s"FROM (SELECT COUNT(*) AS cnt FROM $fromSql)"
   }
 
-  /** Embeddings as double arrays (exact cross-engine arithmetic). */
-  private def emb(spark: SparkSession, dir: String): DataFrame = {
+  /** Embeddings as double arrays (exact cross-engine arithmetic): the
+    * (vec_id, v) frame the ANN, near-dup and SemDeDup paths all read. */
+  private[llm] def emb(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     Tables.load(spark, dir, "embeddings")
       .select($"vec_id", transform($"embedding", x => x.cast("double")).as("v"))
+  }
+
+  /** The probe queries (vec_id < [[NumQueryVecs]]) of an [[emb]] frame,
+    * as (query_id, qv). */
+  private def probes(e: DataFrame): DataFrame =
+    e.filter(col("vec_id") < NumQueryVecs)
+      .select(col("vec_id").as("query_id"), col("v").as("qv"))
+
+  /** The rank tail every probe-query tier shares: exact cosine of each
+    * (query_id, qv, vec_id, v) candidate row, then the top k per query
+    * by (cosine desc, vec_id asc) — a total order, so both engines pick
+    * the same k — planned as a two-phase WindowGroupLimit. */
+  private def rankTopk(cands: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("cosine").desc, col("vec_id").asc)
+    cands.withColumn("cosine", dot(col("qv"), col("v")))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("vec_id").as("neighbor_id"),
+        col("cosine"), col("rank").cast("long").as("rank"))
   }
 
   /** Exact left-fold dot product (unit vectors → cosine). Backed by the
@@ -156,17 +177,9 @@ object Similarity {
   def topkBrute(spark: SparkSession, dir: String, k: Int = TopK): DataFrame = {
     import spark.implicits._
     val e = emb(spark, dir)
-    val q = e.filter($"vec_id" < NumQueryVecs)
-      .select($"vec_id".as("query_id"), $"v".as("qv"))
     // broadcast the tiny probe set; one pass over the corpus, no corpus²
-    val scored = broadcast(q).crossJoin(e)
-      .filter($"vec_id" =!= $"query_id")
-      .withColumn("cosine", dot($"qv", $"v"))
-    val w = Window.partitionBy($"query_id").orderBy($"cosine".desc, $"vec_id".asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter($"rank" <= k)
-      .select($"query_id", $"vec_id".as("neighbor_id"), $"cosine",
-        $"rank".cast("long").as("rank"))
+    rankTopk(broadcast(probes(e)).crossJoin(e)
+      .filter($"vec_id" =!= $"query_id"), k)
   }
 
   /** MMR parameters: λ = MmrLambdaNum/10, candidate pool, result size. */
@@ -272,16 +285,8 @@ object Similarity {
       .filter($"vec_id" =!= $"query_id")
       .select($"query_id", $"vec_id").distinct()
     val e = emb(spark, dir)
-    val scored = cand
-      .join(broadcast(e.filter($"vec_id" < NumQueryVecs)
-        .select($"vec_id".as("query_id"), $"v".as("qv"))), Seq("query_id"))
-      .join(e, Seq("vec_id"))
-      .withColumn("cosine", dot($"qv", $"v"))
-    val w = Window.partitionBy($"query_id").orderBy($"cosine".desc, $"vec_id".asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter($"rank" <= k)
-      .select($"query_id", $"vec_id".as("neighbor_id"), $"cosine",
-        $"rank".cast("long").as("rank"))
+    rankTopk(cand.join(broadcast(probes(e)), Seq("query_id"))
+      .join(e, Seq("vec_id")), k)
   }
 
   /** Neighbors kept per vector in the corpus-wide k-NN graph. */
@@ -330,12 +335,9 @@ object Similarity {
   /** Probe-query vectors collected to the driver — ANN routing metadata
     * (NumQueryVecs rows, the IVF/PQ convention). */
   private def queryVecs(spark: SparkSession,
-                        dir: String): Array[(Long, Array[Double])] = {
-    import spark.implicits._
-    emb(spark, dir).filter($"vec_id" < NumQueryVecs)
-      .select($"vec_id", $"v").collect()
+                        dir: String): Array[(Long, Array[Double])] =
+    probes(emb(spark, dir)).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-  }
 
   /** Exact ‖a−b‖² in ascending-index fold order (the order both engines
     * spell, so routing distances are bit-identical to the oracle's). */
@@ -356,13 +358,13 @@ object Similarity {
     }
 
   /** Tier 3: IVF — KMeans(16) coarse quantizer, vectors assigned to
-    * centroid lists, probe the 2 nearest lists per query. Since r11 the
+    * centroid lists, probe the 2 nearest lists per query. The
     * centroids + inverted lists are PERSISTED index artifacts
     * ([[AnnIndex.ensureIvf]]: train once per corpus, serve many) and
     * scoring reads the store — which also makes the tier fully
     * oracle-checkable: the centroids are a pinned parquet input both
     * engines read, and routing + exact cosine re-rank is plain
-    * arithmetic (no more "KMeans is engine-internal"). */
+    * arithmetic, although KMeans itself is engine-internal. */
   def topkIvf(spark: SparkSession, dir: String, k: Int = TopK,
               nprobe: Int = 2): DataFrame = {
     import spark.implicits._
@@ -370,21 +372,13 @@ object Similarity {
     val probeDf = route(queryVecs(spark, dir), cents, nprobe)
       .toDF("query_id", "list_id")
     val e = emb(spark, dir)
-    val q = e.filter($"vec_id" < NumQueryVecs)
-      .select($"vec_id".as("query_id"), $"v".as("qv"))
     // probe rows broadcast onto the inverted lists (only probed lists
     // are read), candidate ids then attach their vectors by key — the
     // shuffle carries ids, not 64 doubles
-    val scored = broadcast(probeDf.join(q, "query_id"))
+    rankTopk(broadcast(probeDf.join(probes(e), "query_id"))
       .join(codes, Seq("list_id"))
       .filter($"vec_id" =!= $"query_id")
-      .join(e, Seq("vec_id"))
-      .withColumn("cosine", dot($"qv", $"v"))
-    val w = Window.partitionBy($"query_id").orderBy($"cosine".desc, $"vec_id".asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter($"rank" <= k)
-      .select($"query_id", $"vec_id".as("neighbor_id"), $"cosine",
-        $"rank".cast("long").as("rank"))
+      .join(e, Seq("vec_id")), k)
   }
 
   /** FILTERED ANN — top-k under a metadata predicate (`label = 3`,
@@ -418,19 +412,50 @@ object Similarity {
     val e = emb(spark, dir)
     val keep = Tables.load(spark, dir, "embeddings")
       .filter($"label" === labelVal).select($"vec_id")
-    val q = e.filter($"vec_id" < NumQueryVecs)
-      .select($"vec_id".as("query_id"), $"v".as("qv"))
-    val scored = broadcast(probeDf.join(q, "query_id"))
+    rankTopk(broadcast(probeDf.join(probes(e), "query_id"))
       .join(codes, Seq("list_id"))
       .join(keep, Seq("vec_id"), "left_semi") // predicate on posting rows
       .filter($"vec_id" =!= $"query_id")
-      .join(e, Seq("vec_id")) // vectors attach AFTER the filter
-      .withColumn("cosine", dot($"qv", $"v"))
-    val w = Window.partitionBy($"query_id").orderBy($"cosine".desc, $"vec_id".asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter($"rank" <= k)
-      .select($"query_id", $"vec_id".as("neighbor_id"), $"cosine",
-        $"rank".cast("long").as("rank"))
+      .join(e, Seq("vec_id")), k) // vectors attach AFTER the filter
+  }
+
+  /** Driver-side ADC table of one (residual) query vector: per subspace
+    * s, ‖q_s − c‖² for every centroid c of codebook s — the kernel shared
+    * by the two PQ tiers (raw-vector PQ and residual IVF-PQ feed it
+    * different q). Input is the PARQUET-LOADED codebook ([[AnnIndex]]),
+    * so the table is built from the same bytes the DuckDB oracle reads,
+    * in the same ascending-index fold order. */
+  private def adcTable(q: Array[Double],
+                       books: Array[Array[Array[Double]]]): Seq[Seq[Double]] =
+    (0 until AnnIndex.M).map { s =>
+      val qs = q.slice(s * AnnIndex.SubDim, (s + 1) * AnnIndex.SubDim)
+      books(s).toSeq.map(l2sq(qs, _))
+    }
+
+  /** Approximate L2² of a coded candidate: Σ_s dt[s][c_s], m array
+    * lookups, left-associated like the oracle's sum. */
+  private def adcSum: Column =
+    (0 until AnnIndex.M).map(s =>
+      element_at(element_at(col("dt"), s + 1), col(s"c$s") + 1)).reduce(_ + _)
+
+  /** The ADC-shortlist → exact-re-rank tail shared by the PQ tiers:
+    * 10·k best code-distance candidates per query (two-phase
+    * WindowGroupLimit), then exact cosines of JUST the shortlist
+    * against raw vectors — shortlist-many dots per query, never
+    * corpus-many, which is the whole economy of PQ at scale. ONE home
+    * so the shortlist factor / tie-break / re-rank join can never
+    * silently diverge between the tiers. ADC is a SHORTLIST stage, not
+    * the final ranking (the standard ADC+refine layout): quantization
+    * error makes code distances too coarse to order the head exactly. */
+  private def shortlistRerank(scored: DataFrame, e: DataFrame,
+                              k: Int): DataFrame = {
+    val wAdc = Window.partitionBy(col("query_id"))
+      .orderBy(col("adc_l2sq").asc, col("vec_id").asc)
+    val shortlist = scored.withColumn("adc_l2sq", adcSum)
+      .withColumn("r0", row_number().over(wAdc))
+      .filter(col("r0") <= k * 10)
+      .select(col("query_id"), col("vec_id"))
+    rankTopk(shortlist.join(e, "vec_id").join(broadcast(probes(e)), "query_id"), k)
   }
 
   /** Product quantization ANN — the memory-side answer at 100 TB, next
@@ -442,159 +467,80 @@ object Similarity {
     *
     * TRAIN: one KMeans(k=16, fixed seed) per 8-dim subspace — the
     * codebooks are dimension-sized driver metadata, like the IVF
-    * centroids. ENCODE: 4 model.transforms assign each vector its
+    * centroids. ENCODE: m model.transforms assign each vector its
     * nearest centroid per subspace — one map-side pass, no shuffle.
-    * SCORE (ADC): each probe query precomputes a 4×16 table of
-    * ‖q_s − c_{s,j}‖² driver-side; approximate L2² = Σ_s dt_s[code_s]
-    * is m array lookups per candidate (broadcast probe × corpus codes,
-    * the sim_topk_brute shape but over 4-byte codes instead of 256-B
+    * Both run once per corpus ([[AnnIndex.ensurePq]]); every invocation
+    * loads the persisted index and scores. SCORE (ADC): each probe query
+    * precomputes its m×16 [[adcTable]] driver-side; approximate L2² is m
+    * array lookups per candidate (broadcast probe × corpus codes, the
+    * sim_topk_brute shape but over 4-byte codes instead of 256-B
     * vectors), followed by an exact re-rank of the 10·k ADC shortlist
-    * only. Per-query top-k via the two-phase window (WindowGroupLimit).
+    * only ([[shortlistRerank]]).
     *
-    * No DuckDB oracle (KMeans codebooks are engine-internal, like
-    * sim_topk_ivf); SimilaritySpec floors recall@k vs the hash-green
-    * exact brute twin and pins determinism. */
-  /** Per-subspace ADC table entry: ‖qs − c‖² for every codebook
-    * centroid — the driver-side kernel shared by the two PQ tiers
-    * (raw-vector PQ and residual IVF-PQ feed it different qs). Input is
-    * the PARQUET-LOADED codebook ([[AnnIndex]]), so the table is built
-    * from the same bytes the DuckDB oracle reads. */
-  private def subspaceDists(qs: Array[Double],
-                            book: Array[Array[Double]]): Seq[Double] =
-    book.toSeq.map(l2sq(qs, _))
-
-  /** The ADC-shortlist → exact-re-rank tail shared by the PQ tiers:
-    * 10·k best code-distance candidates per query (two-phase
-    * WindowGroupLimit), then exact cosines of JUST the shortlist
-    * against raw vectors — shortlist-many dots per query, never
-    * corpus-many, which is the whole economy of PQ at scale. ONE home
-    * so the shortlist factor / tie-break / re-rank join can never
-    * silently diverge between the tiers. */
-  private def shortlistRerank(scored: DataFrame, e: DataFrame,
-                              k: Int): DataFrame = {
-    val wAdc = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_l2sq").asc, col("vec_id").asc)
-    val shortlist = scored.withColumn("r0", row_number().over(wAdc))
-      .filter(col("r0") <= k * 10)
-      .select(col("query_id"), col("vec_id"))
-    val q = e.filter(col("vec_id") < NumQueryVecs)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"))
-    val refined = shortlist.join(e, "vec_id").join(broadcast(q), "query_id")
-      .withColumn("cosine", dot(col("qv"), col("v")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    refined.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("cosine"), col("rank").cast("long").as("rank"))
-  }
-
-  /** PQ tier, scoring from the persisted index ([[AnnIndex.ensurePq]]:
-    * codebooks + codes trained once per corpus — the artifact a real
-    * pipeline persists — then every invocation loads and scores). The
-    * pinned parquet codebooks make the whole serve path oracle-checkable:
-    * DuckDB recomputes the per-query ADC tables from the same codebook
-    * bytes, replays the m-lookup code-distance sum in the same fold
-    * order, and re-ranks the same 10·k shortlist with the same exact
-    * cosine. */
+    * The pinned parquet codebooks make the whole serve path
+    * oracle-checkable: DuckDB recomputes the per-query ADC tables from
+    * the same codebook bytes, replays the m-lookup code-distance sum in
+    * the same fold order, and re-ranks the same 10·k shortlist with the
+    * same exact cosine. */
   def topkPq(spark: SparkSession, dir: String, k: Int = TopK): DataFrame = {
     import spark.implicits._
-    val m = AnnIndex.M
-    val subDim = AnnIndex.SubDim
     val (books, codes) = AnnIndex.ensurePq(spark, dir)
     val e = emb(spark, dir)
     // driver-side ADC tables per probe query (probe set = driver
     // metadata, the IVF convention)
-    val probeDf = queryVecs(spark, dir).toSeq.map { case (qid, qv) =>
-      val dt: Seq[Seq[Double]] = (0 until m).map { s =>
-        subspaceDists(qv.slice(s * subDim, (s + 1) * subDim), books(s))
-      }
-      (qid, dt)
-    }.toDF("query_id", "dt")
-    val adc = (0 until m).map(s =>
-      element_at(element_at($"dt", s + 1), col(s"c$s") + 1))
-      .reduce(_ + _)
-    val scored = codes.crossJoin(broadcast(probeDf))
-      .filter($"vec_id" =!= $"query_id")
-      .withColumn("adc_l2sq", adc)
-    // ADC is a SHORTLIST stage, not the final ranking (the standard
-    // ADC+refine layout): quantization error makes code distances too
-    // coarse to order the head exactly — see [[shortlistRerank]].
-    shortlistRerank(scored, e, k)
+    val probeDf = queryVecs(spark, dir).toSeq
+      .map { case (qid, qv) => (qid, adcTable(qv, books)) }
+      .toDF("query_id", "dt")
+    shortlistRerank(codes.crossJoin(broadcast(probeDf))
+      .filter($"vec_id" =!= $"query_id"), e, k)
   }
 
-  /** IVF-PQ — the production trillion-vector ANN layout, composing the
-    * two tiers above: IVF bounds WHICH vectors are scored (nprobe
-    * coarse lists per query instead of the corpus) and PQ bounds WHAT
-    * is read per candidate (m sub-codes instead of the raw vector).
-    * Codes are trained and assigned on RESIDUALS (v − coarse centroid),
-    * the IVFADC layout of Jégou et al., "Product Quantization for
-    * Nearest Neighbor Search" (TPAMI 2011), §IV: residuals concentrate
-    * near 0, so a 16-entry-per-subspace book quantizes them far tighter
-    * than raw vectors at equal bits.
+  /** The IVF-PQ serve path over (centroids, residual codebooks, codes) —
+    * the production trillion-vector ANN layout, composing the two tiers
+    * above: IVF bounds WHICH vectors are scored (nprobe coarse lists per
+    * query instead of the corpus) and PQ bounds WHAT is read per
+    * candidate (m sub-codes instead of the raw vector). Codes are
+    * trained and assigned on RESIDUALS (v − coarse centroid), the IVFADC
+    * layout of Jégou et al., "Product Quantization for Nearest Neighbor
+    * Search" (TPAMI 2011), §IV: residuals concentrate near 0, so a
+    * 16-entry-per-subspace book quantizes them far tighter than raw
+    * vectors at equal bits ([[AnnIndex.trainIvfPq]]).
     *
-    * TRAIN: one coarse KMeans(nlist) + m per-subspace KMeans(ncodes)
-    * fits on a deterministic hash-sample of residuals (codebooks are
-    * driver metadata — the PQ convention; sub-fits submitted from
-    * concurrent threads like topkPq's). ENCODE: one 16-row broadcast
-    * join attaches centroids, one map-side zip_with forms residuals,
-    * m assigns — the (vec_id, list_id, c0..c7) code table is the
-    * artifact a real pipeline persists. SCORE: probe routing and the
-    * per-(query, probed-list) ADC tables are driver-built from the
-    * query's OWN residual against that list's centroid (nprobe·m·ncodes
-    * doubles per query); candidates attach by an equi-join on list_id
-    * to the broadcast probe rows — only probed lists are ever touched
-    * (the IVF economy), each candidate costs m array lookups (the PQ
-    * economy) — then the 10·k ADC shortlist is exactly re-ranked
-    * against raw vectors, never the corpus.
-    *
-    * No DuckDB oracle (two layers of engine-internal KMeans, like
-    * sim_topk_ivf/sim_topk_pq); SimilaritySpec floors recall@k vs the
-    * hash-green brute twin and pins re-run determinism. */
-  /** The IVF-PQ serve path over (centroids, residual codebooks, codes):
-    * driver-side probe routing + per-(query, probed-list) residual ADC
-    * tables — bounded at NumQueryVecs·nprobe·m·ncodes doubles (the
-    * IVF/PQ metadata rule) — then an equi-join on list_id attaches
-    * candidates to the broadcast probe rows (only probed lists are ever
-    * touched: the IVF economy; each candidate costs m array lookups:
-    * the PQ economy), and the 10·k ADC shortlist is exactly re-ranked
-    * against raw vectors, never the corpus. Shared verbatim by the
-    * always-rebuild query and the cached one, so build-vs-serve can
-    * never drift. */
+    * SCORE: probe routing ([[route]]) and the per-(query, probed-list)
+    * ADC tables are driver-built from the query's OWN residual against
+    * that list's centroid — bounded at NumQueryVecs·nprobe·m·ncodes
+    * doubles (the IVF/PQ metadata rule); candidates attach by an
+    * equi-join on list_id to the broadcast probe rows — only probed
+    * lists are ever touched (the IVF economy), each candidate costs m
+    * array lookups (the PQ economy) — then the 10·k ADC shortlist is
+    * exactly re-ranked against raw vectors, never the corpus. Shared
+    * verbatim by the always-rebuild query and the cached one, so
+    * build-vs-serve can never drift. */
   private def scoreIvfPq(spark: SparkSession, dir: String,
                          centArr: Array[Array[Double]],
                          books: Array[Array[Array[Double]]],
                          codes: DataFrame,
                          k: Int, nprobe: Int): DataFrame = {
     import spark.implicits._
-    val m = AnnIndex.M
-    val subDim = AnnIndex.SubDim
     val e = emb(spark, dir)
-    val probeRows = queryVecs(spark, dir).toSeq.flatMap { case (qid, qv) =>
-      val near = centArr.zipWithIndex.map { case (c, i) => (i, l2sq(qv, c)) }
-        .sortBy(t => (t._2, t._1)).take(nprobe).map(_._1)
-      near.map { li =>
-        val qres = Array.tabulate(qv.length)(j => qv(j) - centArr(li)(j))
-        val dt: Seq[Seq[Double]] = (0 until m).map { s =>
-          subspaceDists(qres.slice(s * subDim, (s + 1) * subDim), books(s))
-        }
-        (qid, li, dt)
-      }
-    }
-    val probeDf = probeRows.toDF("query_id", "list_id", "dt")
-    val adc = (0 until m).map(s =>
-      element_at(element_at($"dt", s + 1), col(s"c$s") + 1)).reduce(_ + _)
-    val scored = codes.join(broadcast(probeDf), Seq("list_id"))
-      .filter($"vec_id" =!= $"query_id")
-      .withColumn("adc_l2sq", adc)
-    shortlistRerank(scored, e, k)
+    val qvs = queryVecs(spark, dir)
+    val qv = qvs.toMap
+    val probeDf = route(qvs, centArr, nprobe).map { case (qid, li) =>
+      val q = qv(qid)
+      (qid, li, adcTable(Array.tabulate(q.length)(j => q(j) - centArr(li)(j)), books))
+    }.toDF("query_id", "list_id", "dt")
+    shortlistRerank(codes.join(broadcast(probeDf), Seq("list_id"))
+      .filter($"vec_id" =!= $"query_id"), e, k)
   }
 
   /** The BUILD benchmark: trains coarse + residual codebooks and encodes
     * the corpus on every invocation (exactly the production index-build
     * job), then serves through [[scoreIvfPq]]. Codebook/centroid arrays
     * are taken from the in-memory models here — this path is the honest
-    * build-cost measurement and deliberately never reads the store. */
+    * build-cost measurement and deliberately never reads the store.
+    * No DuckDB oracle (two layers of engine-internal KMeans);
+    * SimilaritySpec floors recall@k vs the hash-green brute twin and
+    * pins re-run determinism. */
   def topkIvfPq(spark: SparkSession, dir: String, k: Int = TopK,
                 nprobe: Int = 4): DataFrame = {
     val (coarse, bookModels, codes) = AnnIndex.trainIvfPq(spark, dir)
@@ -604,10 +550,10 @@ object Similarity {
       codes.localCheckpoint(false), k, nprobe)
   }
 
-  /** The SERVE benchmark (VERDICT r10 #2): loads the persisted index —
-    * training only if this corpus has never been indexed — and scores.
-    * With pinned parquet artifacts the whole query is replayable SQL,
-    * so unlike the build query this one carries a DuckDB oracle. */
+  /** The SERVE benchmark: loads the persisted index — training only if
+    * this corpus has never been indexed — and scores. With pinned
+    * parquet artifacts the whole query is replayable SQL, so unlike the
+    * build query this one carries a DuckDB oracle. */
   def topkIvfPqCached(spark: SparkSession, dir: String, k: Int = TopK,
                       nprobe: Int = 4): DataFrame = {
     val (cents, books, codes) = AnnIndex.ensureIvfPq(spark, dir)
@@ -635,8 +581,7 @@ object Similarity {
     * batch-sized shuffle, corpus never read. */
   def indexUpdate(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val (bp, _) = AnnIndex.ensurePqPaths(spark, dir)
-    val books = spark.read.parquet(bp) // (sub, code, cent)
+    val books = AnnIndex.pqBooks(spark, dir) // (sub, code, cent)
     val batch = emb(spark, dir).filter(
       TextOps.hash48(concat(lit("upd:"), $"vec_id".cast("string"))) % 10 === 0)
     val d = aggregate(
@@ -660,8 +605,7 @@ object Similarity {
     * only the codes table (vec_id, list_id), never a vector. */
   def indexStats(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val (_, cp) = AnnIndex.ensureIvfPaths(spark, dir)
-    val codes = spark.read.parquet(cp)
+    val codes = AnnIndex.ivfCodes(spark, dir)
     val totals = codes.agg(count(lit(1)).as("total"))
     codes.groupBy($"list_id").agg(count(lit(1)).as("n"))
       .crossJoin(broadcast(totals))
@@ -862,7 +806,7 @@ object Similarity {
   private val subDim = AnnIndex.SubDim
 
   /** Per-subspace squared-distance fold for the ADC table — mirrors
-    * [[subspaceDists]]'s ascending-index accumulation bit-for-bit. */
+    * [[adcTable]]'s ascending-index accumulation bit-for-bit. */
   private def adcDtSql(qsExpr: String): String =
     s"""list_reduce(list_prepend(0.0::DOUBLE,
        |           list_transform(list_zip(

@@ -148,27 +148,43 @@ object TextOps {
 
   type Q = (SparkSession, String) => DataFrame
 
-  /** Token/length/quality statistics per document. */
-  private val stats: Q = (spark, dir) => {
-    import spark.implicits._
-    val t = toks($"text")
+  /** The per-document measures the quality rules read, by output name:
+    * token count, unique-token count, and the average-token-length,
+    * stopword and unique-token ratios over the whitespace tokens. */
+  private def qualityMeasures(text: Column): Map[String, Column] = {
+    val t = toks(text)
     val nTok = size(t)
     val sumLen = aggregate(t, lit(0), (a, x) => a + length(x))
     val nStop = size(filter(t, x => x.isInCollection(Stopwords)))
     val nUniq = size(array_distinct(t))
+    Map("n_tokens" -> nTok, "n_uniq_tokens" -> nUniq,
+      "avg_token_len" -> sumLen.cast("double") / nTok,
+      "stop_ratio" -> nStop.cast("double") / nTok,
+      "uniq_ratio" -> nUniq.cast("double") / nTok)
+      .map { case (n, c) => n -> c.as(n) }
+  }
+
+  /** The C4/Gopher-style quality rules over [[qualityMeasures]] columns,
+    * in reason order: (reason a failing doc is dropped for, pass test).
+    * `d_text_stats` scores a doc by the rules it passes and
+    * `d_quality_filter` keeps it iff it passes all of them. */
+  private val qualityRules: Seq[(String, Column)] = Seq(
+    "length" -> col("n_tokens").between(20, 1000),
+    "repetition" -> (col("uniq_ratio") >= 0.2),
+    "stopwords" -> (col("stop_ratio") <= 0.5),
+    "token_shape" -> col("avg_token_len").between(3.0, 12.0))
+
+  /** Token/length/quality statistics per document; quality_score is
+    * 0.25 per passed [[qualityRules]] rule. */
+  private val stats: Q = (spark, dir) => {
+    import spark.implicits._
+    val m = qualityMeasures($"text")
     Tables.load(spark, dir, "documents")
-      .select($"doc_id", $"lang", $"n_chars",
-        length($"text").as("n_chars_calc"),
-        nTok.as("n_tokens"),
-        nUniq.as("n_uniq_tokens"),
-        (sumLen.cast("double") / nTok).as("avg_token_len"),
-        (nStop.cast("double") / nTok).as("stop_ratio"),
-        (nUniq.cast("double") / nTok).as("uniq_ratio"))
-      .withColumn("quality_score",
-        when($"n_tokens".between(20, 1000), 0.25).otherwise(0.0) +
-        when($"uniq_ratio" >= 0.2, 0.25).otherwise(0.0) +
-        when($"stop_ratio" <= 0.5, 0.25).otherwise(0.0) +
-        when($"avg_token_len".between(3.0, 12.0), 0.25).otherwise(0.0))
+      .select(Seq($"doc_id", $"lang", $"n_chars", length($"text").as("n_chars_calc")) ++
+        Seq("n_tokens", "n_uniq_tokens", "avg_token_len", "stop_ratio",
+          "uniq_ratio").map(m): _*)
+      .withColumn("quality_score", qualityRules
+        .map { case (_, ok) => when(ok, 0.25).otherwise(0.0) }.reduce(_ + _))
   }
 
   /** Language-ID heuristic: CJK charset check, then marker-stopword
@@ -269,30 +285,21 @@ object TextOps {
           .as("chars_per_token"))
   }
 
-  /** C4/Gopher-style document filter: keep iff EVERY quality rule
-    * passes; reason names the first failing rule (deterministic rule
-    * order) so drop rates are auditable per rule. Same thresholds as
-    * the quality_score components in [[stats]]. Takes the docs frame
+  /** C4/Gopher-style document filter: keep iff EVERY [[qualityRules]]
+    * rule passes; reason names the first failing rule (deterministic rule
+    * order) so drop rates are auditable per rule. Takes the docs frame
     * directly (rather than (spark, dir)) because it is pure map-side —
     * the SAME plan runs batch or as a readStream stage (parity-tested
     * in StreamingSpec). */
   def qualityFilterOf(docs: DataFrame): DataFrame = {
-    val t = toks(col("text"))
-    val nTok = size(t)
-    val sumLen = aggregate(t, lit(0), (a, x) => a + length(x))
-    val nStop = size(filter(t, x => x.isInCollection(Stopwords)))
-    val nUniq = size(array_distinct(t))
+    val m = qualityMeasures(col("text"))
+    val ((r0, ok0), rest) = (qualityRules.head, qualityRules.tail)
     docs
-      .select(col("doc_id"), nTok.as("n_tokens"),
-        (nUniq.cast("double") / nTok).as("uniq_ratio"),
-        (nStop.cast("double") / nTok).as("stop_ratio"),
-        (sumLen.cast("double") / nTok).as("avg_token_len"))
-      .withColumn("reason",
-        when(!col("n_tokens").between(20, 1000), "length")
-          .when(col("uniq_ratio") < 0.2, "repetition")
-          .when(col("stop_ratio") > 0.5, "stopwords")
-          .when(!col("avg_token_len").between(3.0, 12.0), "token_shape")
-          .otherwise("ok"))
+      .select(col("doc_id") +:
+        Seq("n_tokens", "uniq_ratio", "stop_ratio", "avg_token_len").map(m): _*)
+      .withColumn("reason", rest
+        .foldLeft(when(!ok0, r0)) { case (c, (r, ok)) => c.when(!ok, r) }
+        .otherwise("ok"))
       .withColumn("keep", (col("reason") === "ok").cast("int"))
       .select(col("doc_id"), col("keep"), col("reason"))
   }

@@ -642,8 +642,7 @@ object StreamingWindows {
     import org.apache.spark.sql.functions._
     val m = graft.llm.AnnIndex.M
     val subDim = graft.llm.AnnIndex.SubDim
-    val (bp, _) = graft.llm.AnnIndex.ensurePqPaths(spark, dir)
-    val books = spark.read.parquet(bp)
+    val books = graft.llm.AnnIndex.pqBooks(spark, dir)
       .groupBy(col("sub"))
       .agg(array_sort(collect_list(struct(col("code"), col("cent"))))
         .as("cents"))

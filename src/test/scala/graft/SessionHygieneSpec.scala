@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{SessionBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Ascending, AttributeReference}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.LogicalRDD
@@ -10,8 +10,9 @@ import graft.llm.Dedup
 import graft.queries.Analytics
 
 /** Law: a query leaves the session it was handed as it found it — same
-  * SQL conf, same tables and temp views, same context checkpoint dir —
-  * so no result or timing depends on what ran earlier in the JVM. Each
+  * SQL conf, same tables and temp views, same context checkpoint dir,
+  * same number of listeners on the context's bus — so no result or
+  * timing depends on what ran earlier in the JVM. Each
   * call gets its own `newSession()` of the shared context, so a view or
   * conf left behind by another suite cannot mask a leak here. That
   * session runs at 16 shuffle partitions, above the stateful drains'
@@ -36,7 +37,8 @@ class SessionHygieneSpec extends SparkSpec {
   private def state(s: SparkSession): State = State(
     s.conf.getAll,
     s.catalog.listTables().collect().map(t => (t.name, t.isTemporary)).toSet,
-    s.sparkContext.getCheckpointDir)
+    s.sparkContext.getCheckpointDir,
+    SessionBridge.listeners(s).size)
 
   private def assertLeavesSessionAsFound(label: String)(
       run: SparkSession => Unit): Unit = {
@@ -54,6 +56,9 @@ class SessionHygieneSpec extends SparkSpec {
     assert(after.checkpointDir == before.checkpointDir,
       s"$label moved the checkpoint dir: ${before.checkpointDir} → " +
         s"${after.checkpointDir}")
+    assert(after.listeners == before.listeners,
+      s"$label left ${after.listeners - before.listeners} listener(s) on the " +
+        "context's bus")
   }
 
   for (name <- Seq("j1_sql_left_join", "a14_grouping_sets", "dedup_clusters") ++
@@ -100,5 +105,6 @@ class SessionHygieneSpec extends SparkSpec {
 object SessionHygieneSpec {
   final case class State(conf: Map[String, String],
                          tables: Set[(String, Boolean)],
-                         checkpointDir: Option[String])
+                         checkpointDir: Option[String],
+                         listeners: Int)
 }

@@ -1,6 +1,11 @@
 package graft.llm
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.attribute.FileTime
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import graft.SparkSpec
 
@@ -80,14 +85,53 @@ class AnnIndexSpec extends SparkSpec {
     // componentGlob scans a file list whose size is independent of how
     // many corpus generations this tier has seen.
     val dir = "/root/testdata/sf0.01"
-    val (bp, cp) = AnnIndex.ensurePqPaths(spark, dir)
+    val paths = AnnIndex.pqPaths(spark, dir)
     val tier = AnnIndex.sig(spark, dir).takeWhile(_ != '_')
-    Seq(bp, cp).foreach { comp =>
+    paths.values.foreach { comp =>
       val parent = Paths.get(comp).getParent
       val sameTier = Files.list(parent).filter(p =>
         p.getFileName.toString.startsWith(s"sig=${tier}_")).count()
       assert(sameTier == 1L,
         s"expected exactly one sig=${tier}_* dir under $parent, got $sameTier")
+    }
+  }
+
+  test("sig is read job-free from the _FP sidecar and rescanned after a corpus change") {
+    // A BYTE copy of sf0.001's corpus: same sig, so its artifacts are
+    // sf0.001's own tier. A corpus with the same row count but other
+    // values would share the tier and its train would sweep sf0.001's
+    // artifact away. A fixed dir and the source's mtime give the copy
+    // the same fingerprint on every run, so the `_FP` line it records
+    // does not pile up in the shared store run after run.
+    val d = Paths.get(sys.props("java.io.tmpdir"), "graft-annidx-memo")
+    graft.util.Scratch.deleteRecursively(d)
+    Files.createDirectories(d)
+    val copy = d.resolve("embeddings.parquet")
+    Files.copy(Paths.get("/root/testdata/sf0.001/embeddings.parquet"), copy,
+      StandardCopyOption.COPY_ATTRIBUTES)
+    val jobs = new AtomicInteger
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    def jobsOf(f: => String): (String, Int) = {
+      ListenerDrain(sc); jobs.set(0)
+      val r = f
+      ListenerDrain(sc); (r, jobs.get)
+    }
+    sc.addSparkListener(counter)
+    try {
+      AnnIndex.ensurePq(spark, d.toString) // records the copy's fingerprint
+      val (memo, memoJobs) = jobsOf(AnnIndex.sig(spark, d.toString))
+      assert(memoJobs == 0, s"a recorded fingerprint must not rescan ($memoJobs jobs)")
+      Files.setLastModifiedTime(copy, FileTime.fromMillis(
+        Files.getLastModifiedTime(copy).toMillis + 60000L))
+      val (rescanned, scanJobs) = jobsOf(AnnIndex.sig(spark, d.toString))
+      assert(scanJobs >= 1, "a changed file listing must rescan the corpus")
+      assert(rescanned == memo, "same bytes, same sig")
+    } finally {
+      sc.removeSparkListener(counter)
+      graft.util.Scratch.deleteRecursively(d)
     }
   }
 

@@ -439,7 +439,7 @@ class DedupSpec extends SparkSpec {
     val tau = 0.30
     val out = Dedup.semDedup(spark, sf, tau)
       .as[(Long, Long, Boolean)].collect().toSet
-    val cents = spark.read.parquet(graft.llm.AnnIndex.ensureSemPath(spark, sf))
+    val cents = graft.llm.AnnIndex.semCents(spark, sf)
       .select($"list_id", $"cent").as[(Int, Seq[Double])].collect()
       .sortBy(_._1).map { case (i, c) => (i.toLong, c.toArray) }
     val vecs = spark.read.parquet(s"$sf/embeddings.parquet")
