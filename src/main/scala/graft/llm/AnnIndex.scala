@@ -149,7 +149,11 @@ object AnnIndex {
     * never share a sidecar line) plus every data file's
     * (name, size, mtime). */
   private def fsFingerprint(dir: String): String =
-    s"${Paths.get(dir).toAbsolutePath.normalize}::${fsListing(dir)}"
+    s"${fpPrefix(dir)}${fsListing(dir)}"
+
+  /** The corpus-path part every fingerprint of `dir` starts with. */
+  private def fpPrefix(dir: String): String =
+    s"${Paths.get(dir).toAbsolutePath.normalize}::"
 
   private def fsListing(dir: String): String = {
     val p = Paths.get(dir, "embeddings.parquet")
@@ -202,30 +206,50 @@ object AnnIndex {
     }
   }
 
-  /** Store hygiene, run before any train:
-    *  - prune sibling `sig=*` artifacts of the SAME TIER (identical
-    *    row-count component, different value/id components) — those are
-    *    regenerated-corpus leftovers, and they both grow the store
-    *    unboundedly and shift the oracle's componentGlob file list
-    *    (DuckDB cardinality estimates move with it — an oracle green in
-    *    one environment could flip to a join-order bomb in another).
-    *    OTHER tiers' artifacts are kept deliberately: a verify at one sf
-    *    is routinely followed by a bench at another, and pruning across
-    *    tiers would force a retrain inside the first TIMED bench entry
-    *    after every verify. The store is therefore bounded at one dir per
-    *    tier, stable across corpus regenerations.
+  /** Store hygiene, run by every [[ensure]] of the corpus at `corpus`:
+    *  - prune the sibling `sig=*` artifacts this corpus left behind: a
+    *    dir other than `keepSig`'s whose `_FP` lines ALL name this
+    *    corpus's path was trained from an earlier version of the corpus
+    *    at that path. Such leftovers both grow the store unboundedly and
+    *    shift the oracle's componentGlob file list (DuckDB cardinality
+    *    estimates move with it — an oracle green in one environment
+    *    could flip to a join-order bomb in another). A dir that another
+    *    corpus path resolved to is kept, whatever its row count: sf0.001
+    *    and sf0.01 both hold 500 embeddings, and a verify at one sf is
+    *    routinely followed by a bench at another, so pruning across
+    *    corpora would force a retrain inside the first timed entry. A
+    *    dir with no `_FP` line names no corpus (its trainer died before
+    *    recording one); it falls back to the row-count rule and is
+    *    pruned when its sig's row count equals `keepSig`'s.
+    *  - drop this corpus's lines from the `_FP` of every kept sibling:
+    *    this path now resolves to `keepSig`, so they are stale. A dir
+    *    that several paths resolved to (a corpus and a byte copy of it)
+    *    is then pruned once every one of them has moved on, instead of
+    *    being kept forever by another path's old line. The store is
+    *    therefore bounded at one dir per corpus path.
     *  - sweep `_tmp-*` leftovers from writers that died between the
     *    parquet write and the rename. Only dead writers' temps are
     *    swept (pid suffix no longer alive) — a live concurrent
     *    trainer's in-flight temp is left alone. */
-  private[llm] def sweep(component: String, keepSig: String): Unit = {
+  private[llm] def sweep(component: String, keepSig: String,
+                         corpus: String): Unit = {
     val parent = Paths.get(component).getParent
     if (parent != null && Files.isDirectory(parent)) {
       val keep = s"sig=$keepSig"
       val tier = s"sig=${keepSig.takeWhile(_ != '_')}_"
+      val mine = fpPrefix(corpus)
       Files.list(parent).forEach { p =>
         val n = p.getFileName.toString
-        val staleSig = n.startsWith(tier) && n != keep
+        val staleSig = n.startsWith("sig=") && n != keep && {
+          val fps = fpLines(p)
+          val others = fps.filterNot(_.startsWith(mine))
+          if (others.nonEmpty && others.size < fps.size) {
+            val tmp = p.resolve(s"_FP.tmp-${ProcessHandle.current().pid()}")
+            Files.write(tmp, others.asJava)
+            Files.move(tmp, p.resolve("_FP"), StandardCopyOption.ATOMIC_MOVE)
+          }
+          if (fps.isEmpty) n.startsWith(tier) else others.isEmpty
+        }
         val deadTmp = n.startsWith("_tmp-") && {
           val pid = n.substring(n.lastIndexOf('-') + 1)
           pid.nonEmpty && pid.forall(_.isDigit) &&
@@ -335,20 +359,20 @@ object AnnIndex {
   // byte-identical codebooks even right after a fresh train.
 
   /** Train-if-absent for one tier: the `sig=` dir of each component for
-    * this corpus, by component name. When any is missing, the components'
-    * same-tier leftovers are swept, `train` (handed the sig) returns one
-    * frame per component in `components` order, and each is written
-    * atomically. The fingerprint is recorded after every component
-    * exists, so a `_FP` sidecar always describes a complete tier. */
+    * this corpus, by component name. Each component's leftovers from
+    * this corpus path are swept ([[sweep]]); when any component is
+    * missing, `train` (handed the sig) returns one frame per component
+    * in `components` order, and each is written atomically. The
+    * fingerprint is recorded after every component exists, so a `_FP`
+    * sidecar always describes a complete tier. */
   private def ensure(spark: SparkSession, dir: String, kind: String,
                      components: String*)(
       train: String => Seq[DataFrame]): Map[String, String] = {
     val (s, fp) = sigFp(spark, dir)
     val paths = components.map(c => c -> componentPath(kind, c, s))
-    if (!paths.forall(p => ready(p._2))) {
-      paths.foreach(p => sweep(p._2, s))
+    paths.foreach(p => sweep(p._2, s, dir))
+    if (!paths.forall(p => ready(p._2)))
       paths.zip(train(s)).foreach { case ((_, p), df) => writeAtomic(df, p) }
-    }
     recordFp(s, fp)
     paths.toMap
   }

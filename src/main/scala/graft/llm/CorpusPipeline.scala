@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.llm.TextOps.{hash48Sql, toks, ToksSql}
+import graft.llm.TextOps.{hash48Sql, ToksSql}
 
 /** The corpus-prep pipeline, composed end-to-end as ONE declared query —
   * the flow a training-data team actually ships: quality-filter the raw
@@ -39,19 +39,8 @@ object CorpusPipeline {
     val canon = k.groupBy(md5($"text").as("fp"))
       .agg(min($"doc_id").as("doc_id"))
     val uniq = k.join(canon.select($"doc_id"), "doc_id")
-    val pct = TextOps.hash48($"doc_id".cast("string")) % 100
-    uniq
-      .select($"doc_id", filter(toks($"text"), x => length(x) > 0).as("w"))
-      .select($"doc_id", $"w", explode(sequence(
-        lit(1), greatest(size($"w"), lit(1)), lit(16))).as("start"))
-      .select($"doc_id",
-        (($"start" - 1) / 16).cast("long").as("chunk_id"),
-        slice($"w", $"start", lit(32)).as("c"))
-      .select($"doc_id", $"chunk_id",
-        size($"c").cast("long").as("n_toks"),
-        array_join($"c", " ").as("chunk_text"),
-        when(pct < 80, "train").when(pct < 90, "val").otherwise("test")
-          .as("split"))
+    TextOps.chunksOf(uniq)
+      .withColumn("split", TextOps.hashSplit($"doc_id"))
   }
 
   val queries: Map[String, Q] = Map("pipe_corpus_prep" -> pipe)

@@ -460,7 +460,7 @@ object Multimodal {
       s"""list_sum(list_transform(range(0, $oh), y ->
          |    list_sum(list_transform(range(0, $ow), x ->
          |      299*($r) + 587*($g) + 114*($b)))))""".stripMargin
-    (s"CAST(('0x' || substr(md5($hexes), 1, 12)) AS BIGINT)", lum)
+    (TextOps.hash48Sql(hexes), lum)
   }
 
   val oracles: Map[String, String] = Map(

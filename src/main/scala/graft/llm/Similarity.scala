@@ -954,8 +954,7 @@ object Similarity {
          |       WHERE sig = sg.s),
          |e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          |b AS MATERIALIZED (SELECT vec_id, v FROM e
-         |      WHERE (CAST(('0x' || substr(md5('upd:' || CAST(vec_id AS VARCHAR)), 1, 12))
-         |               AS BIGINT) % 10) = 0),
+         |      WHERE (${TextOps.hash48Sql("'upd:' || CAST(vec_id AS VARCHAR)")} % 10) = 0),
          |sc AS (SELECT b.vec_id, bk.sub, bk.code,
          |         list_reduce(list_prepend(0.0::DOUBLE,
          |           list_transform(list_zip(

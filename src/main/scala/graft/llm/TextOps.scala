@@ -88,6 +88,15 @@ object TextOps {
   def hash48(s: Column): Column =
     call_function("graft_hash48", s)
 
+  /** The leakage-safe 80/10/10 train/val/test split of a GROUP key: a
+    * pure function of hash48(key), so all rows of a group share one
+    * split, stable across reruns, re-ingests and partition layouts
+    * (o5 by user, pipe_corpus_prep by document). */
+  def hashSplit(key: Column): Column = {
+    val pct = hash48(key.cast("string")) % 100
+    when(pct < 80, "train").when(pct < 90, "val").otherwise("test")
+  }
+
   /** Distinct token 3-gram shingles (empty array for <3 tokens).
     *
     * Spelled as zip_with over the token array and its shifted slices —
@@ -357,18 +366,19 @@ object TextOps {
           .orderBy($"n".desc, $"term".asc)).cast("long"))
   }
 
-  /** Context-window chunking: split each document into overlapping
+  /** Context-window chunking of `docs` (doc_id, text): overlapping
     * token windows (size 32, stride 16) — the standard prep step for
-    * embedding models and LM training windows. Pure map-side: the only
-    * row growth is the ~len/stride chunk fanout per doc (bounded, known
-    * in advance), no shuffle at all. Every chunk start ≤ len, so every
-    * token lands in ≥ 1 chunk; tail chunks are shorter rather than
-    * padded (padding is a model concern, not a data concern). */
-  private val chunk: Q = (spark, dir) => {
-    import spark.implicits._
+    * embedding models and LM training windows — as (doc_id, chunk_id,
+    * n_toks, chunk_text). Pure map-side: the only row growth is the
+    * ~len/stride chunk fanout per doc (bounded, known in advance), no
+    * shuffle at all. Every chunk start ≤ len, so every token lands in
+    * ≥ 1 chunk; tail chunks are shorter rather than padded (padding is
+    * a model concern, not a data concern). */
+  def chunksOf(docs: DataFrame): DataFrame = {
+    import docs.sparkSession.implicits._
     val ChunkLen = 32
     val Stride = 16
-    Tables.load(spark, dir, "documents")
+    docs
       .select($"doc_id",
         filter(toks($"text"), x => length(x) > 0).as("w"))
       .select($"doc_id", $"w", explode(sequence(
@@ -380,6 +390,9 @@ object TextOps {
         size($"c").cast("long").as("n_toks"),
         array_join($"c", " ").as("chunk_text"))
   }
+
+  private val chunk: Q = (spark, dir) =>
+    chunksOf(Tables.load(spark, dir, "documents"))
 
   /** Token-distribution entropy per document — the information-density
     * quality signal (near-zero entropy = degenerate repetition, the

@@ -3,9 +3,11 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.Tables
 import graft.util.Cols._
+import graft.util.Storage
 import graft.llm.TextOps.{hash48, hash48Sql}
 
 /** Product/marketing analytics over the `events` and order tables — the
@@ -19,14 +21,6 @@ import graft.llm.TextOps.{hash48, hash48Sql}
 object Analytics {
 
   type Q = (SparkSession, String) => DataFrame
-
-  /** Size-adaptive pin level for the catalog-scale cached graph tables
-    * — moved to [[graft.util.Storage.adaptiveLevel]] (r8: j8_setsim_join
-    * hit the identical OOM mode, so the policy is shared now); full
-    * rationale and probe history live there. */
-  private def adaptiveLevel(dir: String)
-      : org.apache.spark.storage.StorageLevel =
-    graft.util.Storage.adaptiveLevel(dir)
 
   /** Checkpoint a STATIC per-round join side, KEYED for reuse when the
     * corpus is big: hash-partition on the round's join key and sort
@@ -43,11 +37,11 @@ object Analytics {
     * ClusteredDistribution of any key set containing `key`) and never
     * moves again.
     *
-    * SIZE-ADAPTIVE like [[adaptiveLevel]], and for the mirror reason: at
-    * small scale the node state fits the broadcast threshold, so AQE
-    * already runs every round exchange-free on the edge side by
-    * broadcasting the state — there the pin only trades a runtime
-    * broadcast-hash join for a static sort-merge join and measures
+    * SIZE-ADAPTIVE like [[Storage.adaptiveLevel]], and for the mirror
+    * reason: at small scale the node state fits the broadcast
+    * threshold, so AQE already runs every round exchange-free on the
+    * edge side by broadcasting the state — there the pin only trades a
+    * runtime broadcast-hash join for a static sort-merge join and measures
     * SLOWER (g1 at sf0.1: 5.2 s unpinned vs 6.7 s pinned). Past the
     * threshold the state outgrows broadcast, AQE falls back to
     * exchanging the edge list every round, and the pin wins (g1 at sf1:
@@ -56,9 +50,9 @@ object Analytics {
     * scale where the derived node state leaves broadcast range. */
   private def pinKeyed(df: DataFrame, key: String, dedupKeys: Seq[String],
                        dir: String,
-                       ser: org.apache.spark.storage.StorageLevel)
+                       ser: StorageLevel)
       : DataFrame =
-    if (graft.util.Storage.factBytes(dir) <= (64L << 20)) {
+    if (Storage.factBytes(dir) <= (64L << 20)) {
       val deduped =
         if (dedupKeys.isEmpty) df else df.dropDuplicates(dedupKeys)
       deduped.localCheckpoint(true, ser)
@@ -69,7 +63,7 @@ object Analytics {
     * HashPartitioning(key, n) + [key ASC] in its LogicalRDD. */
   private[graft] def pinByKey(df: DataFrame, key: String,
                               dedupKeys: Seq[String],
-                              ser: org.apache.spark.storage.StorageLevel)
+                              ser: StorageLevel)
       : DataFrame = {
     val spark = df.sparkSession
     // Explicit partition count: an unnumbered repartition(col) is an AQE
@@ -95,6 +89,66 @@ object Analytics {
     // the caller's session.
     graft.Sessions.scoped(spark, "spark.sql.adaptive.enabled" -> "false")(s =>
       org.apache.spark.sql.SessionBridge.bind(laid, s).localCheckpoint(true, ser))
+  }
+
+  // ---- the co-purchase graph of g1–g5, g7 and g8: parts linked when
+  // one order contains both (the j6 edge set). Each of them derives its
+  // edges from the builders below, so they compute over the same graph
+  // by construction.
+
+  /** Part pairs that share an order, named (`u`, `v`): each undirected
+    * edge once (u < v), or both directions of it when `directed`
+    * (u ≠ v). The distinct (order, part) base is checkpointed eagerly
+    * at `ser` because both sides of the self-join read it. */
+  private def coPairs(spark: SparkSession, dir: String, ser: StorageLevel,
+                      directed: Boolean, u: String = "u",
+                      v: String = "v"): DataFrame = {
+    val items = Tables.load(spark, dir, "lineitem")
+      .select(col("l_orderkey"), col("l_partkey")).distinct()
+      .localCheckpoint(true, ser)
+    val (a, b) = (col("a.l_partkey"), col("b.l_partkey"))
+    items.as("a").join(items.as("b"),
+        col("a.l_orderkey") === col("b.l_orderkey") &&
+          (if (directed) a =!= b else a < b))
+      .select(a.as(u), b.as(v))
+  }
+
+  /** An undirected (u, v) edge list with every edge in both directions. */
+  private def bidirected(und: DataFrame): DataFrame =
+    und.unionAll(und.select(col("v").as("u"), col("u").as("v")))
+
+  /** The walk prologue of g7/g8: lineitem's (order, part) pairs pinned
+    * keyed on l_orderkey (the dedup rides the pin's repartition, since
+    * HashPartitioning(l_orderkey) satisfies the (l_orderkey, l_partkey)
+    * distinct), and the walk starts — `walk_id`, `node`, then `extra` —
+    * designated by hash48 of `salt` + node.
+    *
+    * The node set is the parts with ≥1 co-purchase neighbor ("DISTINCT
+    * src of the edge set") without building edges: parts on multi-part
+    * orders. The start designation is corpus-adaptive (the gateBits
+    * rule): modulus clamp(nodes/16, 4, 64) keeps the expected start
+    * count ≥ ~16 on a tiny graph (a fixed /64 designates ZERO starts at
+    * sf0.001) while walks grow ∝ n/64 at scale. The count is node-sized
+    * driver metadata, like g1's n. */
+  private def walkPrologue(spark: SparkSession, dir: String, salt: String,
+                           extra: Column*): (DataFrame, DataFrame) = {
+    val items = pinKeyed(
+      Tables.load(spark, dir, "lineitem")
+        .select(col("l_orderkey"), col("l_partkey")),
+      "l_orderkey", Seq("l_orderkey", "l_partkey"), dir,
+      Storage.adaptiveLevel(dir))
+    val multi = items.groupBy(col("l_orderkey"))
+      .agg(count(lit(1)).as("np")).filter(col("np") >= 2)
+      .select(col("l_orderkey"))
+    val nodes = items.join(multi, Seq("l_orderkey"), "left_semi")
+      .select(col("l_partkey").as("node")).distinct()
+      .localCheckpoint(false)
+    val mod = math.max(4L, math.min(64L, nodes.count() / 16L))
+    val starts = nodes
+      .filter(hash48(concat(lit(salt), col("node").cast("string"))) % mod === 0)
+      .select(Seq(col("node").as("walk_id"), col("node")) ++ extra: _*)
+      .localCheckpoint(false)
+    (items, starts)
   }
 
   // ---- ev_cohort_retention: the classic signup-cohort × week-offset
@@ -231,21 +285,15 @@ object Analytics {
   private val pagerank: Q = (spark, dir) => {
     import spark.implicits._
     // items/edges are catalog-scale and each is read multiple times —
-    // pinned at the size-adaptive level (see [[adaptiveLevel]]; the
-    // sf10 probe history behind it is documented there). Node-sized
+    // pinned at the size-adaptive level (see [[Storage.adaptiveLevel]];
+    // the sf10 probe history behind it is documented there). Node-sized
     // ranks stay on the default level.
-    val ser = adaptiveLevel(dir)
-    val items = Tables.load(spark, dir, "lineitem")
-      .select($"l_orderkey", $"l_partkey").distinct()
-      .localCheckpoint(true, ser) // both self-join sides read this
+    val ser = Storage.adaptiveLevel(dir)
     // Pinned KEYED on src ([[pinKeyed]]): the per-round rank join and the
     // degree aggregate both cluster on src, so neither ever exchanges the
     // edge list again — per round only node-sized ranks move.
     val edges = pinKeyed(
-      items.as("a").join(items.as("b"),
-          $"a.l_orderkey" === $"b.l_orderkey" &&
-            $"a.l_partkey" =!= $"b.l_partkey")
-        .select($"a.l_partkey".as("src"), $"b.l_partkey".as("dst")),
+      coPairs(spark, dir, ser, directed = true, "src", "dst"),
       "src", Seq("src", "dst"), dir, ser)
     val deg = edges.groupBy($"src").agg(count(lit(1)).as("deg"))
     val nodes = deg.select($"src".as("node"), $"deg")
@@ -298,36 +346,11 @@ object Analytics {
   // walk ever dead-ends.
   private val randomWalk: Q = (spark, dir) => {
     import spark.implicits._
-    val ser = adaptiveLevel(dir)
-    // dedup rides the pin's repartition (HashPartitioning(l_orderkey)
-    // satisfies the (l_orderkey, l_partkey) distinct — the g1 rule)
-    val items = pinKeyed(
-      Tables.load(spark, dir, "lineitem")
-        .select($"l_orderkey", $"l_partkey"),
-      "l_orderkey", Seq("l_orderkey", "l_partkey"), dir, ser)
-    // Node set = parts with ≥1 co-purchase neighbor ("DISTINCT src of
-    // the edge set") WITHOUT building edges: parts on multi-part orders.
-    val multi = items.groupBy($"l_orderkey")
-      .agg(count(lit(1)).as("np")).filter($"np" >= 2)
-      .select($"l_orderkey")
-    val nodes = items.join(multi, Seq("l_orderkey"), "left_semi")
-      .select($"l_partkey".as("node")).distinct()
-      .localCheckpoint(false)
-    // Corpus-adaptive start designation (the gateBits rule): modulus
-    // clamp(nodes/16, 4, 64) keeps the expected start count ≥ ~16 on a
-    // tiny graph (a fixed /64 designated ZERO starts at sf0.001 — the
-    // fixed-parameter failure mode again) while walks grow ∝ n/64 at
-    // scale. The count is node-sized driver metadata, like g1's n.
-    val mod = math.max(4L, math.min(64L, nodes.count() / 16L))
-    val starts = nodes
-      .filter(graft.llm.TextOps.hash48(
-        concat(lit("rws:"), $"node".cast("string"))) % mod === 0)
-      .select($"node".as("walk_id"), $"node")
-      .localCheckpoint(false)
+    val (items, starts) = walkPrologue(spark, dir, "rws:")
     var frontier = starts
     var out = starts.withColumn("step", lit(0L))
     for (t <- 1 to 3) {
-      val h = graft.llm.TextOps.hash48(concat(
+      val h = hash48(concat(
         lit("rw:"), $"walk_id".cast("string"),
         lit(s":$t:"), $"dst".cast("string")))
       val walkOrders = broadcast(frontier)
@@ -373,24 +396,8 @@ object Analytics {
   // so the explode never multiplies shared-order duplicates.
   private val node2vec: Q = (spark, dir) => {
     import spark.implicits._
-    val ser = adaptiveLevel(dir)
-    val items = pinKeyed(
-      Tables.load(spark, dir, "lineitem")
-        .select($"l_orderkey", $"l_partkey"),
-      "l_orderkey", Seq("l_orderkey", "l_partkey"), dir, ser)
-    val multi = items.groupBy($"l_orderkey")
-      .agg(count(lit(1)).as("np")).filter($"np" >= 2)
-      .select($"l_orderkey")
-    val nodes = items.join(multi, Seq("l_orderkey"), "left_semi")
-      .select($"l_partkey".as("node")).distinct()
-      .localCheckpoint(false)
-    val mod = math.max(4L, math.min(64L, nodes.count() / 16L))
-    val starts = nodes
-      .filter(graft.llm.TextOps.hash48(
-        concat(lit("n2s:"), $"node".cast("string"))) % mod === 0)
-      .select($"node".as("walk_id"), $"node",
-        lit(null).cast("long").as("prev"))
-      .localCheckpoint(false)
+    val (items, starts) = walkPrologue(spark, dir, "n2s:",
+      lit(null).cast("long").as("prev"))
     var frontier = starts
     var out = starts.select($"walk_id", lit(0L).as("step"), $"node")
     for (t <- 1 to 3) {
@@ -411,14 +418,14 @@ object Analytics {
         .distinct()
       // Both join sides derive from `frontier`, so dataframe-column
       // conditions (cand("walk_id") === prevN("walk_id")) resolve only
-      // through plan-id disambiguation and logged a trivially-true-
-      // equals warning (ADVICE r12) — explicit string aliases make the
-      // condition unambiguous by construction.
+      // through plan-id disambiguation and log a trivially-true-equals
+      // warning — explicit string aliases make the condition
+      // unambiguous by construction.
       val w = when($"c.prev".isNull, 1L)
         .when($"c.dst" === $"c.prev", 4L)
         .when($"p.nbr".isNotNull, 1L)
         .otherwise(2L)
-      val h = graft.llm.TextOps.hash48(concat(
+      val h = hash48(concat(
         lit("n2v:"), $"walk_id".cast("string"),
         lit(s":$t:"), $"dst".cast("string"),
         lit(":"), $"r".cast("string")))
@@ -464,7 +471,7 @@ object Analytics {
         .select($"l_orderkey", $"l_partkey"),
         $"o_orderkey" === $"l_orderkey")
       .select($"o_custkey".as("c"), $"l_partkey".as("p")).distinct()
-      .localCheckpoint(true, adaptiveLevel(dir))
+      .localCheckpoint(true, Storage.adaptiveLevel(dir))
     def normalize(raw: DataFrame, key: String, out: String): DataFrame = {
       val mx = raw.agg(max($"raw").as("mx"))
       raw.crossJoin(broadcast(mx))
@@ -552,7 +559,7 @@ object Analytics {
     import spark.implicits._
     val orders = Tables.load(spark, dir, "orders")
       .select($"o_orderkey", $"o_custkey", $"o_orderstatus",
-        (dec2($"o_totalprice") * 100).cast("long").as("cents"),
+        priceCents.as("cents"),
         (hash48($"o_orderkey".cast("string"))).as("h"))
     // one op per key: delete wins over update (mutually exclusive CASE)
     val isDel = $"h" % 17 === 0
@@ -677,15 +684,8 @@ object Analytics {
       spark: SparkSession, dir: String, nbkOverride: Option[Int])
       : DataFrame = {
     import spark.implicits._
-    val ser = adaptiveLevel(dir)
-    val items = Tables.load(spark, dir, "lineitem")
-      .select($"l_orderkey", $"l_partkey").distinct()
-      .localCheckpoint(true, ser)
-    val und = items.as("a").join(items.as("b"),
-        $"a.l_orderkey" === $"b.l_orderkey" &&
-          $"a.l_partkey" < $"b.l_partkey")
-      .select($"a.l_partkey".as("u"), $"b.l_partkey".as("v"))
-      .distinct()
+    val ser = Storage.adaptiveLevel(dir)
+    val und = coPairs(spark, dir, ser, directed = false).distinct()
       .localCheckpoint(true, ser)
     val deg = und.select($"u".as("n")).unionAll(und.select($"v".as("n")))
       .groupBy($"n").agg(count(lit(1)).as("dg"))
@@ -706,7 +706,7 @@ object Analytics {
     // out-neighbor arrays, node-sized, array length ≤ max out-degree =
     // O(√m) under the orientation; membership is set-semantics so
     // collect_list order (partitioning-dependent) cannot reach the
-    // result. DEGREE-CAPPED SLICING (r13, the g2 memory-shape fix):
+    // result. DEGREE-CAPPED SLICING (g2's memory-shape fix):
     // when √m outgrows nbkCap elements (≈0.5 MB of longs — comfortably
     // under any G1 humongous-allocation threshold), the arrays are
     // BUCKETED by a hash of the neighbor VALUE into nbk slices. The
@@ -721,10 +721,11 @@ object Analytics {
     // edges ≈ factBytes/53 (sf0.1: 64 MB ↔ 1.2 M edges), nbk =
     // ⌈√m̂ / nbkCap⌉ — 1 (today's exact plan, zero overhead) through
     // ~sf100, engaging only past ~4 G edges where an O(√m) array would
-    // be a multi-MB humongous allocation and the GC-bound r12 driver
-    // signature (4.4 s gc, 13.9 GB peak) would become a scale-killer.
+    // be a multi-MB humongous allocation and a GC-bound driver (the
+    // unsliced plan's measured signature: 4.4 s gc, 13.9 GB peak) would
+    // become a scale-killer.
     val nbkCap = 65536L
-    val estEdges = math.max(1L, graft.util.Storage.factBytes(dir) / 53)
+    val estEdges = math.max(1L, Storage.factBytes(dir) / 53)
     val nbk = nbkOverride.getOrElse(math.max(1L, math.ceil(
       math.sqrt(estEdges.toDouble) / nbkCap).toLong).toInt)
     // a sink d (no out-edges) is dropped by the inner join — correct:
@@ -803,7 +804,7 @@ object Analytics {
     val partials = Tables.load(spark, dir, "orders")
       .select($"o_orderstatus", $"o_orderpriority",
         ($"o_orderdate" >= cut).as("is_delta"),
-        (dec2($"o_totalprice") * 100).cast("long").as("cents"))
+        priceCents.as("cents"))
       .groupBy($"o_orderstatus", $"o_orderpriority", $"is_delta")
       .agg(count(lit(1)).as("n"), sum($"cents").as("sum_cents"),
         min($"cents").as("min_cents"), max($"cents").as("max_cents"))
@@ -818,6 +819,29 @@ object Analytics {
         roundRatio2($"sum_cents", $"n").as("avg_price"))
   }
 
+  /** o_totalprice in integer cents: every money column of this file is
+    * integer arithmetic on it, so both engines agree bitwise. */
+  private def priceCents: Column = (dec2(col("o_totalprice")) * 100).cast("long")
+
+  /** Order counts per `key` (= `value`) in the reference window (before
+    * 1998) and the current one — the base of the price-drift family
+    * (a19/m24 bins, a21/ev_mann_whitney values). ONE scan, one
+    * key-sized aggregate of conditional sums (no join, no pivot). */
+  private def refCurCounts(spark: SparkSession, dir: String, key: String,
+                           value: Column): DataFrame = {
+    import spark.implicits._
+    val cut = lit("1998-01-01").cast("timestamp")
+    Tables.load(spark, dir, "orders")
+      .select(value.as(key), ($"o_orderdate" >= cut).as("is_cur"))
+      .groupBy(col(key))
+      .agg(sum(when(!$"is_cur", 1L).otherwise(0L)).as("n_ref"),
+        sum(when($"is_cur", 1L).otherwise(0L)).as("n_cur"))
+  }
+
+  /** a19's and m24's fixed-width $25k price bins. */
+  private def priceBins(spark: SparkSession, dir: String): DataFrame =
+    refCurCounts(spark, dir, "bin", floor(priceCents / 2500000L).cast("long"))
+
   // ---- a19_drift_bins: numeric-distribution drift monitor (the
   // PSI-report shape) between a reference window and the current window
   // of the same table — the companion of d_drift (token space) and
@@ -831,15 +855,7 @@ object Analytics {
   // the drifted flag thresholds |Δbp| > 100 (1 %-point).
   private val driftBins: Q = (spark, dir) => {
     import spark.implicits._
-    val cut = lit("1998-01-01").cast("timestamp")
-    val binned = Tables.load(spark, dir, "orders")
-      .select(
-        floor((dec2($"o_totalprice") * 100).cast("long") / 2500000L)
-          .cast("long").as("bin"),
-        ($"o_orderdate" >= cut).as("is_cur"))
-      .groupBy($"bin")
-      .agg(sum(when(!$"is_cur", 1L).otherwise(0L)).as("n_ref"),
-        sum(when($"is_cur", 1L).otherwise(0L)).as("n_cur"))
+    val binned = priceBins(spark, dir)
     val tot = binned.agg(sum($"n_ref").as("t_ref"), sum($"n_cur").as("t_cur"))
     binned.crossJoin(broadcast(tot))
       .select($"bin", $"n_ref", $"n_cur",
@@ -871,15 +887,7 @@ object Analytics {
   // sf1000.
   private val psi: Q = (spark, dir) => {
     import spark.implicits._
-    val cut = lit("1998-01-01").cast("timestamp")
-    val binned = Tables.load(spark, dir, "orders")
-      .select(
-        floor((dec2($"o_totalprice") * 100).cast("long") / 2500000L)
-          .cast("long").as("bin"),
-        ($"o_orderdate" >= cut).as("is_cur"))
-      .groupBy($"bin")
-      .agg(sum(when(!$"is_cur", 1L).otherwise(0L)).as("n_ref"),
-        sum(when($"is_cur", 1L).otherwise(0L)).as("n_cur"))
+    val binned = priceBins(spark, dir)
     val tot = binned.agg(sum($"n_ref").as("t_ref"), sum($"n_cur").as("t_cur"),
       count(lit(1)).as("b"))
     val dec = (c: Column) => c.cast("decimal(38,0)")
@@ -924,18 +932,10 @@ object Analytics {
     * multiply-consumed in both callers → pinned here once (house
     * pattern), so a change to the bucketing or checkpoint policy can
     * never silently diverge the two statistics. */
-  private def refCurValueCounts(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val cut = lit("1998-01-01").cast("timestamp")
-    Tables.load(spark, dir, "orders")
-      .select((dec2($"o_totalprice") * 100).cast("long").as("cents"),
-        ($"o_orderdate" >= cut).as("is_cur"))
-      .groupBy($"cents")
-      .agg(sum(when(!$"is_cur", 1L).otherwise(0L)).as("n_ref"),
-        sum(when($"is_cur", 1L).otherwise(0L)).as("n_cur"))
-      .withColumn("bucket", shiftright($"cents", 20))
+  private def refCurValueCounts(spark: SparkSession, dir: String): DataFrame =
+    refCurCounts(spark, dir, "cents", priceCents)
+      .withColumn("bucket", shiftright(col("cents"), 20))
       .localCheckpoint(false)
-  }
 
   private val ksDrift: Q = (spark, dir) => {
     import spark.implicits._
@@ -1021,7 +1021,7 @@ object Analytics {
     import spark.implicits._
     val byDow = Tables.load(spark, dir, "orders")
       .select(weekday(to_date($"o_orderdate")).cast("long").as("dow"),
-        (dec2($"o_totalprice") * 100).cast("long").as("cents"))
+        priceCents.as("cents"))
       .groupBy($"dow")
       .agg(count(lit(1)).as("n"), sum($"cents").as("sum_cents"))
     val tot = byDow.agg(sum($"n").as("t_n"), sum($"sum_cents").as("t_c"))
@@ -1029,6 +1029,28 @@ object Analytics {
       .select($"dow", $"n", $"sum_cents",
         ppm($"n", $"t_n").as("row_share_ppm"),
         ppm($"sum_cents", $"t_c").as("rev_share_ppm"))
+  }
+
+  /** The zero-filled daily revenue series (day, rev in cents) of the
+    * time-series family (ev_forecast_naive, ev_changepoint, ev_ewma).
+    * The daily aggregate is the only fact-sized step (date-keyed
+    * shuffle, partial aggs combine map-side); it is dimension-sized and
+    * read twice (the spine's min/max and the join), so it is
+    * materialized once instead of re-scanning orders per consumer. The
+    * spine (sequence() between the first and last day, the t5_gapfill
+    * spelling) makes days with no orders count as 0. One row per
+    * calendar day, so a global window over the series is
+    * documented-safe at any fact scale. */
+  private def dailyRevenue(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val daily = Tables.load(spark, dir, "orders")
+      .select(to_date($"o_orderdate").as("day"), priceCents.as("cents"))
+      .groupBy($"day").agg(sum($"cents").as("rev"))
+      .localCheckpoint(false)
+    daily.agg(min($"day").as("lo"), max($"day").as("hi"))
+      .select(explode(sequence($"lo", $"hi")).as("day"))
+      .join(daily, Seq("day"), "left")
+      .select($"day", coalesce($"rev", lit(0L)).as("rev"))
   }
 
   // ---- ev_forecast_naive: seasonal-naive forecast backtest over the
@@ -1049,17 +1071,7 @@ object Analytics {
   // double), MAE as cents/100.0 (one IEEE division on exact integers).
   private val forecastNaive: Q = (spark, dir) => {
     import spark.implicits._
-    val daily = Tables.load(spark, dir, "orders")
-      .select(to_date($"o_orderdate").as("day"),
-        (dec2($"o_totalprice") * 100).cast("long").as("cents"))
-      .groupBy($"day").agg(sum($"cents").as("rev"))
-      // two consumers (spine min/max + the join) — dimension-sized,
-      // materialize once instead of re-scanning orders per consumer
-      .localCheckpoint(false)
-    val spine = daily.agg(min($"day").as("lo"), max($"day").as("hi"))
-      .select(explode(sequence($"lo", $"hi")).as("day"))
-    val series = spine.join(daily, Seq("day"), "left")
-      .select($"day", coalesce($"rev", lit(0L)).as("rev"))
+    val series = dailyRevenue(spark, dir)
     val w = Window.orderBy($"day") // dimension-sized by construction
     val scored = series
       .withColumn("fc", lag($"rev", 7).over(w))
@@ -1135,17 +1147,7 @@ object Analytics {
   // in dollars (exact floor-ratio), and the day count.
   private val changepoint: Q = (spark, dir) => {
     import spark.implicits._
-    val daily = Tables.load(spark, dir, "orders")
-      .select(to_date($"o_orderdate").as("day"),
-        (dec2($"o_totalprice") * 100).cast("long").as("cents"))
-      .groupBy($"day").agg(sum($"cents").as("rev"))
-      // two consumers (spine min/max + the join) — dimension-sized,
-      // materialize once instead of re-scanning orders per consumer
-      .localCheckpoint(false)
-    val spine = daily.agg(min($"day").as("lo"), max($"day").as("hi"))
-      .select(explode(sequence($"lo", $"hi")).as("day"))
-    val series = spine.join(daily, Seq("day"), "left")
-      .select($"day", coalesce($"rev", lit(0L)).as("rev"))
+    val series = dailyRevenue(spark, dir)
     val w = Window.orderBy($"day")
       .rowsBetween(Window.unboundedPreceding, 0)
     val tot = series.agg(sum($"rev").as("s"), count(lit(1)).as("n"))
@@ -1184,15 +1186,7 @@ object Analytics {
   // projection before the HOF touches it (the d_winnow lesson).
   private val ewma: Q = (spark, dir) => {
     import spark.implicits._
-    val daily = Tables.load(spark, dir, "orders")
-      .select(to_date($"o_orderdate").as("day"),
-        (dec2($"o_totalprice") * 100).cast("long").as("cents"))
-      .groupBy($"day").agg(sum($"cents").as("rev"))
-      .localCheckpoint(false) // spine min/max + the join
-    val spine = daily.agg(min($"day").as("lo"), max($"day").as("hi"))
-      .select(explode(sequence($"lo", $"hi")).as("day"))
-    val series = spine.join(daily, Seq("day"), "left")
-      .select($"day", coalesce($"rev", lit(0L)).as("rev"))
+    val series = dailyRevenue(spark, dir)
     val w = Window.orderBy($"day").rowsBetween(-19, 0)
     val arr = col("arr")
     // shiftleft's Scala wrapper takes a literal Int shift; the SQL
@@ -1227,14 +1221,7 @@ object Analytics {
   // — independent spelling, same semantics.
   private val communities: Q = (spark, dir) => {
     import spark.implicits._
-    val ser = adaptiveLevel(dir)
-    val items = Tables.load(spark, dir, "lineitem")
-      .select($"l_orderkey", $"l_partkey").distinct()
-      .localCheckpoint(true, ser)
-    val und = items.as("a").join(items.as("b"),
-        $"a.l_orderkey" === $"b.l_orderkey" &&
-          $"a.l_partkey" < $"b.l_partkey")
-      .select($"a.l_partkey".as("u"), $"b.l_partkey".as("v"))
+    val ser = Storage.adaptiveLevel(dir)
     // NOT pinned ([[pinKeyed]]): measured at sf1, pinning bi on v cost
     // 17.8→20.6 s — g3's dominant per-round shuffle is the (u, lbl)
     // mode aggregate over the edge-sized join output (untouched by a
@@ -1242,8 +1229,7 @@ object Analytics {
     // into bi exchange-free anyway at any scale where labels fit the
     // threshold; the pin only traded a runtime broadcast for a static
     // SMJ. g1/g5 keep the pin because their state join IS the round.
-    val und2 = und.distinct()
-    val bi = und2.unionAll(und2.select($"v".as("u"), $"u".as("v")))
+    val bi = bidirected(coPairs(spark, dir, ser, directed = false).distinct())
       .localCheckpoint(true, ser)
     var lbl = bi.select($"u".as("n")).distinct()
       .select($"n", $"n".as("lbl"))
@@ -1277,16 +1263,8 @@ object Analytics {
   private[queries] def kcorePeel(spark: SparkSession, dir: String,
                                  rounds: Int): DataFrame = {
     import spark.implicits._
-    val ser = adaptiveLevel(dir)
-    val items = Tables.load(spark, dir, "lineitem")
-      .select($"l_orderkey", $"l_partkey").distinct()
-      .localCheckpoint(true, ser)
-    val und = items.as("a").join(items.as("b"),
-        $"a.l_orderkey" === $"b.l_orderkey" &&
-          $"a.l_partkey" < $"b.l_partkey")
-      .select($"a.l_partkey".as("u"), $"b.l_partkey".as("v"))
-      .distinct()
-    var bi = und.union(und.select($"v".as("u"), $"u".as("v")))
+    val ser = Storage.adaptiveLevel(dir)
+    var bi = bidirected(coPairs(spark, dir, ser, directed = false).distinct())
       .localCheckpoint(true, ser)
     // Early exit: a round that drops nobody is the fixpoint — every
     // later round is an identity re-join over the full edge list (the
@@ -1362,19 +1340,12 @@ object Analytics {
   // combinatorial on a dense graph.
   private val bfs: Q = (spark, dir) => {
     import spark.implicits._
-    val ser = adaptiveLevel(dir)
-    val items = Tables.load(spark, dir, "lineitem")
-      .select($"l_orderkey", $"l_partkey").distinct()
-      .localCheckpoint(true, ser)
-    val und = items.as("a").join(items.as("b"),
-        $"a.l_orderkey" === $"b.l_orderkey" &&
-          $"a.l_partkey" < $"b.l_partkey")
-      .select($"a.l_partkey".as("u"), $"b.l_partkey".as("v"))
+    val ser = Storage.adaptiveLevel(dir)
     // Pinned KEYED on u ([[pinKeyed]]): each round's frontier expansion
     // joins bi("u") to the layer's discoveries, so the edge list never
-    // exchanges after build (the g1/g3 treatment; dedup at the bi level
-    // subsumes the und-level distinct exactly as in g3).
-    val bi = pinKeyed(und.union(und.select($"v".as("u"), $"u".as("v"))),
+    // exchanges after build (the g1 treatment; dedup at the bi level
+    // subsumes the und-level distinct g3/g4 take).
+    val bi = pinKeyed(bidirected(coPairs(spark, dir, ser, directed = false)),
       "u", Seq("u", "v"), dir, ser)
     var dist = bi.select($"u".as("n")).distinct()
       .filter($"n" % 97 === 0)
@@ -1415,7 +1386,7 @@ object Analytics {
     import spark.implicits._
     val daily = Tables.load(spark, dir, "orders")
       .groupBy(to_date($"o_orderdate").as("d"))
-      .agg(sum((dec2($"o_totalprice") * 100).cast("long")).as("y"))
+      .agg(sum(priceCents).as("y"))
     val x0 = daily.agg(min($"d").as("d0"))
     val xy = daily.crossJoin(broadcast(x0))
       .select(datediff($"d", $"d0").cast("long").as("x"), $"y")
@@ -1448,7 +1419,7 @@ object Analytics {
     import spark.implicits._
     val s1 = Tables.load(spark, dir, "orders")
       .select($"o_orderkey".as("k"), $"o_orderstatus".as("st"),
-        (dec2($"o_totalprice") * 100).cast("long").as("cents"))
+        priceCents.as("cents"))
       .localCheckpoint(false) // feeds both snapshots — scan once
     val h = (tag: String) =>
       hash48(concat(lit(tag), $"k".cast("string"))) % 20
@@ -1611,6 +1582,56 @@ object Analytics {
       |       LEAD(valid_from) OVER (PARTITION BY user_id ORDER BY version)
       |         IS NULL AS is_current
       |FROM g""".stripMargin
+
+  /** The co-purchase graph's undirected edges as oracle CTEs (`items`,
+    * `und`), read by g2/g3/g4. g1/g5 stage their own MATERIALIZED
+    * spelling: inlined, their round chains re-run the self-join per
+    * reference and DuckDB runs out of memory. */
+  private val undCtes =
+    """items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+      |und AS (
+      |  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
+      |  FROM items a JOIN items b
+      |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey)""".stripMargin
+
+  /** The zero-filled daily revenue series as oracle CTEs (`d`, `spine`,
+    * `s`), read by ev_forecast_naive, ev_changepoint and ev_ewma. */
+  private val dailyRevenueCtes =
+    """d AS (
+      |  SELECT CAST(o_orderdate AS DATE) AS day,
+      |         SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS rev
+      |  FROM orders GROUP BY 1),
+      |spine AS (
+      |  SELECT unnest(generate_series((SELECT MIN(day) FROM d),
+      |                                (SELECT MAX(day) FROM d),
+      |                                INTERVAL 1 DAY))::DATE AS day),
+      |s AS (SELECT spine.day, COALESCE(d.rev, 0) AS rev
+      |      FROM spine LEFT JOIN d USING (day))""".stripMargin
+
+  /** The g7/g8 oracle: the directed co-purchase edges, the node set and
+    * its start modulus, the starts (`walk_id`, `node`, then `extra`)
+    * designated by hash48 of `salt` + node, three `step` CTE groups
+    * (step t reads `prev` and defines `s<t>`), and the walk rows of all
+    * four steps. */
+  private def walkOracleSql(salt: String, extra: String,
+                            step: (Int, String) => String): String =
+    s"""WITH items AS MATERIALIZED (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+       |edges AS MATERIALIZED (
+       |  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
+       |  FROM items a JOIN items b
+       |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey),
+       |nd AS MATERIALIZED (SELECT DISTINCT src FROM edges),
+       |md AS (SELECT GREATEST(4, LEAST(64, COUNT(*) // 16)) AS m FROM nd),
+       |starts AS MATERIALIZED (
+       |  SELECT src AS walk_id, src AS node$extra FROM nd, md
+       |  WHERE ${hash48Sql(s"'$salt' || CAST(src AS VARCHAR)")} % md.m = 0),
+       |${step(1, "starts")},
+       |${step(2, "s1")},
+       |${step(3, "s2")}
+       |SELECT walk_id, CAST(0 AS BIGINT) AS step, node FROM starts
+       |UNION ALL SELECT walk_id, CAST(1 AS BIGINT), node FROM s1
+       |UNION ALL SELECT walk_id, CAST(2 AS BIGINT), node FROM s2
+       |UNION ALL SELECT walk_id, CAST(3 AS BIGINT), node FROM s3""".stripMargin
 
   val oracles: Map[String, String] = Map(
     // the same two normalized rounds as chained CTEs; // on positive
@@ -1851,16 +1872,7 @@ object Analytics {
         |FROM g, t""".stripMargin,
 
     "ev_changepoint" ->
-      """WITH d AS (
-        |  SELECT CAST(o_orderdate AS DATE) AS day,
-        |         SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS rev
-        |  FROM orders GROUP BY 1),
-        |spine AS (
-        |  SELECT unnest(generate_series((SELECT MIN(day) FROM d),
-        |                                (SELECT MAX(day) FROM d),
-        |                                INTERVAL 1 DAY))::DATE AS day),
-        |s AS (SELECT spine.day, COALESCE(d.rev, 0) AS rev
-        |      FROM spine LEFT JOIN d USING (day)),
+      s"""WITH $dailyRevenueCtes,
         |t AS (SELECT SUM(rev) AS sm, COUNT(*) AS n FROM s),
         |c AS (
         |  SELECT day, n,
@@ -1894,17 +1906,7 @@ object Analytics {
         |FROM g""".stripMargin,
 
     "ev_forecast_naive" ->
-      """WITH d AS (
-        |  SELECT CAST(o_orderdate AS DATE) AS day,
-        |         SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS rev
-        |  FROM orders GROUP BY 1),
-        |spine AS (
-        |  SELECT unnest(generate_series((SELECT MIN(day) FROM d),
-        |                                (SELECT MAX(day) FROM d),
-        |                                INTERVAL 1 DAY))::DATE AS day),
-        |s AS (
-        |  SELECT spine.day, COALESCE(d.rev, 0) AS rev
-        |  FROM spine LEFT JOIN d USING (day)),
+      s"""WITH $dailyRevenueCtes,
         |f AS (
         |  SELECT rev, LAG(rev, 7) OVER (ORDER BY day) AS fc FROM s),
         |e AS (SELECT abs(rev - fc) AS abs_err, rev FROM f WHERE fc IS NOT NULL)
@@ -1914,17 +1916,7 @@ object Analytics {
         |FROM e""".stripMargin,
 
     "ev_ewma" ->
-      """WITH d AS (
-        |  SELECT CAST(o_orderdate AS DATE) AS day,
-        |         SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS rev
-        |  FROM orders GROUP BY 1),
-        |spine AS (
-        |  SELECT unnest(generate_series((SELECT MIN(day) FROM d),
-        |                                (SELECT MAX(day) FROM d),
-        |                                INTERVAL 1 DAY))::DATE AS day),
-        |s AS (
-        |  SELECT spine.day, COALESCE(d.rev, 0) AS rev
-        |  FROM spine LEFT JOIN d USING (day)),
+      s"""WITH $dailyRevenueCtes,
         |l AS (
         |  SELECT day, list(rev) OVER
         |           (ORDER BY day ROWS BETWEEN 19 PRECEDING AND CURRENT ROW)
@@ -1972,11 +1964,7 @@ object Analytics {
     // independent spelling: ROW_NUMBER picks the mode+tie-break that the
     // Spark side gets from max_by(lbl, (cnt, -lbl))
     "g3_communities" ->
-      """WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-        |und AS (
-        |  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-        |  FROM items a JOIN items b
-        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
+      s"""WITH $undCtes,
         |bi AS (SELECT u, v FROM und UNION ALL SELECT v, u FROM und),
         |it0 AS (SELECT DISTINCT u AS n, u AS lbl FROM bi),
         |c1 AS (SELECT b.u, l.lbl, COUNT(*) AS cnt
@@ -1994,11 +1982,7 @@ object Analytics {
         |SELECT n AS p_partkey, lbl AS community FROM it2""".stripMargin,
 
     "g4_kcore" ->
-      """WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-        |und AS (
-        |  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-        |  FROM items a JOIN items b
-        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
+      s"""WITH $undCtes,
         |b0 AS (SELECT u, v FROM und UNION ALL SELECT v, u FROM und),
         |k1 AS (SELECT u FROM b0 GROUP BY u HAVING COUNT(*) >= 3),
         |b1 AS (SELECT b.u, b.v FROM b0 b
@@ -2174,11 +2158,7 @@ object Analytics {
         |GROUP BY 1""".stripMargin,
 
     "g2_triangles" ->
-      """WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-        |und AS (
-        |  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-        |  FROM items a JOIN items b
-        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
+      s"""WITH $undCtes,
         |deg AS (SELECT n, COUNT(*) AS dg FROM
         |          (SELECT u AS n FROM und UNION ALL SELECT v AS n FROM und)
         |        GROUP BY 1),
@@ -2198,8 +2178,8 @@ object Analytics {
         |GROUP BY 1 ORDER BY 2 DESC, 1 LIMIT 25""".stripMargin,
 
     "g1_pagerank" ->
-      // edges/deg/it* staged MATERIALIZED (the j9/r11 lesson, hit at
-      // sf1 by the ROUND CHAIN): inlined, every itK reference re-ran
+      // edges/deg/it* staged MATERIALIZED (hit at sf1 by the ROUND
+      // CHAIN): inlined, every itK reference re-ran
       // the items self-join behind estimate-blind pipelines and the
       // sweep died spilling >80 GB of DuckDB temp; staged, each round
       // reads the 18M-edge table once.
@@ -2235,88 +2215,44 @@ object Analytics {
         |SELECT node AS p_partkey, CAST(r AS BIGINT) AS rank_ppb FROM it3
         |ORDER BY r DESC, node ASC LIMIT 25""".stripMargin,
 
-    // g7: each step CTE picks, per walk, the out-neighbor minimizing the
-    // md5-derived hash48 (identical spelling to the engine's
-    // graft_hash48: first 12 hex chars as a 48-bit integer). Every
-    // frontier CTE staged MATERIALIZED (the g1/r11 round-chain lesson).
-    "g7_random_walk" -> {
-      def h48(expr: String): String =
-        s"CAST(('0x' || substr(md5($expr), 1, 12)) AS BIGINT)"
-      def step(t: Int, prev: String): String =
-        s"""s$t AS MATERIALIZED (SELECT walk_id, node FROM (
-           |    SELECT p.walk_id, e.dst AS node,
-           |      row_number() OVER (PARTITION BY p.walk_id ORDER BY
-           |        ${h48(s"'rw:' || CAST(p.walk_id AS VARCHAR) || ':$t:' || CAST(e.dst AS VARCHAR)")},
-           |        e.dst) AS rn
-           |    FROM $prev p JOIN edges e ON e.src = p.node)
-           |  WHERE rn = 1)""".stripMargin
-      s"""WITH items AS MATERIALIZED (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-         |edges AS MATERIALIZED (
-         |  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-         |  FROM items a JOIN items b
-         |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey),
-         |nd AS MATERIALIZED (SELECT DISTINCT src FROM edges),
-         |md AS (SELECT GREATEST(4, LEAST(64, COUNT(*) // 16)) AS m FROM nd),
-         |starts AS MATERIALIZED (
-         |  SELECT src AS walk_id, src AS node FROM nd, md
-         |  WHERE ${h48("'rws:' || CAST(src AS VARCHAR)")} % md.m = 0),
-         |${step(1, "starts")},
-         |${step(2, "s1")},
-         |${step(3, "s2")}
-         |SELECT walk_id, CAST(0 AS BIGINT) AS step, node FROM starts
-         |UNION ALL SELECT walk_id, CAST(1 AS BIGINT), node FROM s1
-         |UNION ALL SELECT walk_id, CAST(2 AS BIGINT), node FROM s2
-         |UNION ALL SELECT walk_id, CAST(3 AS BIGINT), node FROM s3""".stripMargin
-    },
+    // g7: each step CTE picks, per walk, the out-neighbor minimizing
+    // hash48 (the engine's graft_hash48 spelling). Every frontier CTE is
+    // staged MATERIALIZED, as g1's round chain is.
+    "g7_random_walk" -> walkOracleSql("rws:", "", (t, prev) =>
+      s"""s$t AS MATERIALIZED (SELECT walk_id, node FROM (
+         |    SELECT p.walk_id, e.dst AS node,
+         |      row_number() OVER (PARTITION BY p.walk_id ORDER BY
+         |        ${hash48Sql(s"'rw:' || CAST(p.walk_id AS VARCHAR) || ':$t:' || CAST(e.dst AS VARCHAR)")},
+         |        e.dst) AS rn
+         |    FROM $prev p JOIN edges e ON e.src = p.node)
+         |  WHERE rn = 1)""".stripMargin),
 
     // Mirrors node2vec stage for stage: same edge derivation, start
     // designation, weight CASE (1 uniform first hop / 4 return / 1
     // triangle / 2 explore), replica expansion via generate_series, and
-    // the (hash, dst) argmin. Every stage is MATERIALIZED (the j9/ADC
-    // staging rule — never hand DuckDB's estimate-blind join-order
-    // search a CTE pipeline).
-    "g8_node2vec" -> {
-      def h48(expr: String): String =
-        s"CAST(('0x' || substr(md5($expr), 1, 12)) AS BIGINT)"
-      def step(t: Int, prev: String): String =
-        s"""c$t AS MATERIALIZED (
-           |  SELECT DISTINCT p.walk_id, p.node AS cur, p.prev, e.dst
-           |  FROM $prev p JOIN edges e ON e.src = p.node),
-           |f$t AS MATERIALIZED (
-           |  SELECT c.walk_id, c.cur, c.dst,
-           |    CASE WHEN c.prev IS NULL THEN 1
-           |         WHEN c.dst = c.prev THEN 4
-           |         WHEN t.dst IS NOT NULL THEN 1
-           |         ELSE 2 END AS w
-           |  FROM c$t c LEFT JOIN edges t
-           |    ON t.src = c.prev AND t.dst = c.dst),
-           |x$t AS MATERIALIZED (
-           |  SELECT walk_id, cur, dst,
-           |    unnest(generate_series(0, w - 1)) AS r FROM f$t),
-           |s$t AS MATERIALIZED (SELECT walk_id, node, prev FROM (
-           |    SELECT x.walk_id, x.dst AS node, x.cur AS prev,
-           |      row_number() OVER (PARTITION BY x.walk_id ORDER BY
-           |        ${h48(s"'n2v:' || CAST(x.walk_id AS VARCHAR) || ':$t:' || CAST(x.dst AS VARCHAR) || ':' || CAST(x.r AS VARCHAR)")},
-           |        x.dst) AS rn
-           |    FROM x$t x)
-           |  WHERE rn = 1)""".stripMargin
-      s"""WITH items AS MATERIALIZED (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-         |edges AS MATERIALIZED (
-         |  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-         |  FROM items a JOIN items b
-         |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey),
-         |nd AS MATERIALIZED (SELECT DISTINCT src FROM edges),
-         |md AS (SELECT GREATEST(4, LEAST(64, COUNT(*) // 16)) AS m FROM nd),
-         |starts AS MATERIALIZED (
-         |  SELECT src AS walk_id, src AS node, CAST(NULL AS BIGINT) AS prev
-         |  FROM nd, md
-         |  WHERE ${h48("'n2s:' || CAST(src AS VARCHAR)")} % md.m = 0),
-         |${step(1, "starts")},
-         |${step(2, "s1")},
-         |${step(3, "s2")}
-         |SELECT walk_id, CAST(0 AS BIGINT) AS step, node FROM starts
-         |UNION ALL SELECT walk_id, CAST(1 AS BIGINT), node FROM s1
-         |UNION ALL SELECT walk_id, CAST(2 AS BIGINT), node FROM s2
-         |UNION ALL SELECT walk_id, CAST(3 AS BIGINT), node FROM s3""".stripMargin
-    })
+    // the (hash, dst) argmin. Every stage is MATERIALIZED: DuckDB's
+    // estimate-blind join-order search is never handed a CTE pipeline.
+    "g8_node2vec" -> walkOracleSql("n2s:", ", CAST(NULL AS BIGINT) AS prev",
+      (t, prev) =>
+      s"""c$t AS MATERIALIZED (
+         |  SELECT DISTINCT p.walk_id, p.node AS cur, p.prev, e.dst
+         |  FROM $prev p JOIN edges e ON e.src = p.node),
+         |f$t AS MATERIALIZED (
+         |  SELECT c.walk_id, c.cur, c.dst,
+         |    CASE WHEN c.prev IS NULL THEN 1
+         |         WHEN c.dst = c.prev THEN 4
+         |         WHEN t.dst IS NOT NULL THEN 1
+         |         ELSE 2 END AS w
+         |  FROM c$t c LEFT JOIN edges t
+         |    ON t.src = c.prev AND t.dst = c.dst),
+         |x$t AS MATERIALIZED (
+         |  SELECT walk_id, cur, dst,
+         |    unnest(generate_series(0, w - 1)) AS r FROM f$t),
+         |s$t AS MATERIALIZED (SELECT walk_id, node, prev FROM (
+         |    SELECT x.walk_id, x.dst AS node, x.cur AS prev,
+         |      row_number() OVER (PARTITION BY x.walk_id ORDER BY
+         |        ${hash48Sql(s"'n2v:' || CAST(x.walk_id AS VARCHAR) || ':$t:' || CAST(x.dst AS VARCHAR) || ':' || CAST(x.r AS VARCHAR)")},
+         |        x.dst) AS rn
+         |    FROM x$t x)
+         |  WHERE rn = 1)""".stripMargin))
 }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
 import graft.util.Cols._
+import graft.llm.TextOps.hash48Sql
 
 /** SURVEY.md §2.1/.3/.4/.5/.6/.7/.8/.9 relational operators, one named
   * query per inventory row, each with a DuckDB oracle.
@@ -787,10 +788,8 @@ object Relational {
   // auditable function of the data. 80/10/10 by user.
   private val o5: Q = (spark, dir) => {
     import spark.implicits._
-    val pct = graft.llm.TextOps.hash48($"user_id".cast("string")) % 100
-    val split = when(pct < 80, "train").when(pct < 90, "val").otherwise("test")
-    Tables.load(spark, dir, "events")
-      .select($"event_id", $"user_id", split.as("split"))
+    Tables.load(spark, dir, "events").select($"event_id", $"user_id",
+      graft.llm.TextOps.hashSplit($"user_id").as("split"))
   }
 
   // ---- O6 (extension): weighted sampling without replacement, per
@@ -1333,7 +1332,7 @@ object Relational {
     // same integer CDF thresholds; CASE tests ascending so the smallest
     // matching threshold wins, mirroring the Spark fold
     "o8_poisson_bootstrap" -> {
-      val h = graft.llm.TextOps.hash48Sql(
+      val h = hash48Sql(
         "'bs:' || CAST(r AS VARCHAR) || ':' || CAST(o_orderkey AS VARCHAR)")
       s"""WITH e AS (
          |  SELECT o_orderkey,
@@ -1540,8 +1539,8 @@ object Relational {
     // IDENTICAL sample — the reproducibility property the query exists
     // to demonstrate.
     "o4_stratified_sample" ->
-      """SELECT o_orderkey, o_orderstatus FROM orders
-        |WHERE (CAST(('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 12)) AS BIGINT) % 100) <
+      s"""SELECT o_orderkey, o_orderstatus FROM orders
+        |WHERE (${hash48Sql("CAST(o_orderkey AS VARCHAR)")} % 100) <
         |  CASE o_orderstatus WHEN 'O' THEN 50 WHEN 'F' THEN 20 ELSE 10 END""".stripMargin,
 
     "a12_profile" ->
@@ -1700,19 +1699,17 @@ object Relational {
         |WHERE levenshtein(a.p_name, b.p_name) <= 2""".stripMargin,
 
     "o5_group_hash_split" ->
-      """SELECT event_id, user_id,
-        |  CASE WHEN (CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 12))
-        |               AS BIGINT) % 100) < 80 THEN 'train'
-        |       WHEN (CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 12))
-        |               AS BIGINT) % 100) < 90 THEN 'val'
+      s"""SELECT event_id, user_id,
+        |  CASE WHEN (${hash48Sql("CAST(user_id AS VARCHAR)")} % 100) < 80 THEN 'train'
+        |       WHEN (${hash48Sql("CAST(user_id AS VARCHAR)")} % 100) < 90 THEN 'val'
         |       ELSE 'test' END AS split
         |FROM events""".stripMargin,
 
     "o6_weighted_sample" ->
-      """WITH d AS (
+      s"""WITH d AS (
         |  SELECT doc_id, source, n_chars,
-        |         CAST(round(ln((CAST(('0x' || substr(md5('ws:' || CAST(doc_id AS VARCHAR)), 1, 12))
-        |                     AS BIGINT) + 1) / 281474976710656.0)
+        |         CAST(round(ln((${hash48Sql("'ws:' || CAST(doc_id AS VARCHAR)")}
+        |                     + 1) / 281474976710656.0)
         |               / CAST(greatest(n_chars, 1) AS DOUBLE) * 1e9)
         |           AS BIGINT) AS key
         |  FROM documents),
@@ -1724,7 +1721,7 @@ object Relational {
         |SELECT source, doc_id, n_chars, rk FROM r WHERE rk <= 5""".stripMargin,
 
     "o7_reservoir_sample" -> {
-      val h = graft.llm.TextOps.hash48Sql("'rv:' || CAST(o_orderkey AS VARCHAR)")
+      val h = hash48Sql("'rv:' || CAST(o_orderkey AS VARCHAR)")
       s"""WITH r AS (
          |  SELECT o_orderpriority, o_orderkey,
          |         ROW_NUMBER() OVER (PARTITION BY o_orderpriority

@@ -1,9 +1,19 @@
 package graft.queries
 
-import java.nio.file.Files
+import java.io.RandomAccessFile
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import org.apache.spark.ListenerDrain
+import org.apache.spark.sql.SessionBridge
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
+import graft.util.Storage
 
 /** Planted-truth semantics for the analytics layer (the DuckDB oracle
   * proves cross-engine parity; these prove the MATH on hand-checkable
@@ -822,6 +832,67 @@ class AnalyticsSpec extends SparkSpec {
     assert(out == want, "engine disagrees with the driver-side replay")
     assert(sawReturn && sawTriangle && sawExplore,
       "all three weight classes must occur among candidates")
+  }
+
+  /** The keyed branch of `pinKeyed` engages only past 64 MB of
+    * lineitem, beyond every sf the tests and the bench run. A copy of
+    * sf0.001 whose lineitem.parquet is a dir holding sf0.001's file plus
+    * a sparse `_pad` file takes it on sf0.001's rows: Spark's reader
+    * skips `_` files and Storage.factBytes counts them. The keyed pins
+    * are seen through the checkpoints' own query executions: only the
+    * keyed branch checkpoints a plan with HashPartitioning. */
+  test("graph pins: the keyed branch returns the plain branch's rows") {
+    val sf = "/root/testdata/sf0.001"
+    val big = Files.createTempDirectory("an-keyed")
+    val li = Files.createDirectories(big.resolve("lineitem.parquet"))
+    Files.copy(Paths.get(sf, "lineitem.parquet"), li.resolve("part-0.parquet"))
+    val pad = new RandomAccessFile(li.resolve("_pad").toFile, "rw")
+    try pad.setLength(65L << 20) finally pad.close()
+    assert(Storage.factBytes(big.toString) > (64L << 20))
+    assert(Storage.factBytes(sf) <= (64L << 20))
+    val pinKeys = new ConcurrentLinkedQueue[Seq[String]]
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f == "localCheckpoint") qe.executedPlan.outputPartitioning match {
+          case h: HashPartitioning =>
+            pinKeys.add(h.expressions.collect { case a: Attribute => a.name })
+          case _ =>
+        }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // A registered listener gives its session, and every scoped clone
+    // of it, an ExecutionListenerBus on the context's bus, which Spark
+    // drops only when that session is garbage-collected: at a GC during
+    // some later suite, whose listener counts it would shift. So the
+    // queries run on a session of their own, whose buses are removed
+    // before the test ends.
+    val s = spark.newSession()
+    val buses = SessionBridge.listeners(spark).toSet
+    def run(q: String, dir: String): (Seq[String], Seq[Seq[String]]) = {
+      ListenerDrain(spark.sparkContext)
+      pinKeys.clear()
+      val rows = Analytics.queries(q)(s, dir).collect()
+        .map(_.mkString("|")).sorted.toSeq
+      ListenerDrain(spark.sparkContext)
+      (rows, pinKeys.toArray(Array.empty[Seq[String]]).toSeq)
+    }
+    s.listenerManager.register(listener)
+    try {
+      Seq("g1_pagerank" -> "src", "g5_bfs" -> "u",
+        "g7_random_walk" -> "l_orderkey", "g8_node2vec" -> "l_orderkey")
+        .foreach { case (q, key) =>
+          val (plain, plainPins) = run(q, sf)
+          val (keyed, keyedPins) = run(q, big.toString)
+          assert(plainPins.isEmpty, s"$q: the plain branch pinned by key")
+          assert(keyedPins == Seq(Seq(key)),
+            s"$q: expected one pin hash-partitioned on $key, got $keyedPins")
+          assert(keyed == plain, s"$q: keyed rows differ from plain rows")
+        }
+    } finally {
+      SessionBridge.listeners(spark).filterNot(buses)
+        .foreach(spark.sparkContext.removeSparkListener)
+      graft.util.Scratch.deleteRecursively(big)
+    }
   }
 
   private implicit class PairMap(rows: Array[(String, Long, Double)]) {
