@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.metrics.source.CodegenMetrics
+
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR.
   *
   * Contract:
@@ -66,6 +68,10 @@ object Bench {
     import java.lang.management.ManagementFactory
     val gcBeans = ManagementFactory.getGarbageCollectorMXBeans.asScala
     def gcMs: Long = gcBeans.map(_.getCollectionTime).sum
+    // Whole-stage codegen compiles (the JVM-wide count): an entry whose
+    // classes were evicted from the codegen cache recompiles them on
+    // every pass, which shows here without a profiler.
+    def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val heapPools = ManagementFactory.getMemoryPoolMXBeans.asScala
       .filter(_.getType == java.lang.management.MemoryType.HEAP)
     def storageBytes: Long =
@@ -125,6 +131,7 @@ object Bench {
       var i = 0
       var storagePre = 0L
       val gc0 = gcMs
+      val compiles0 = compiles
       val steal0 = stealMs
       heapPools.foreach(_.resetPeakUsage())
       while (i < passes && !errors.contains(name)) {
@@ -145,7 +152,8 @@ object Bench {
         i += 1
       }
       val heapPeakMb = heapPools.map(_.getPeakUsage.getUsed).sum >> 20
-      diags(name) = s"""{"gc_ms":${gcMs - gc0},"heap_peak_mb":$heapPeakMb,""" +
+      diags(name) = s"""{"gc_ms":${gcMs - gc0},""" +
+        s""""codegen_compiles":${compiles - compiles0},"heap_peak_mb":$heapPeakMb,""" +
         s""""storage_pre_mb":${storagePre >> 20},""" +
         s""""storage_post_mb":${storageBytes >> 20},""" +
         s""""steal_ms":${stealMs - steal0}}"""

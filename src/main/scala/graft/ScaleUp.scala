@@ -107,7 +107,7 @@ object ScaleUp {
 
     outTables.foreach { case (name, df) =>
       df.write.mode("overwrite").parquet(s"$out/$name.parquet")
-      println(s"[scaleup] $name: ${spark.read.parquet(s"$out/$name.parquet").count()} rows")
+      println(s"[scaleup] $name: ${Tables.parquet(spark, s"$out/$name.parquet").count()} rows")
     }
     spark.stop()
   }

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SessionBridge, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryListenerBus
 
 /** The ONE SparkSession builder for every graft main (Verify, Bench) and
   * test suite: a main or suite with its own builder drifts from this
@@ -78,6 +77,19 @@ object Sessions {
       // picks it at submit time (spark.sql.catalogImplementation=hive);
       // nothing here depends on which catalog serves the tables.
       .config("spark.sql.warehouse.dir", graft.util.Scratch.dir("warehouse"))
+      // Whole-stage codegen cache: Spark keeps 100 compiled classes by
+      // default, an LRU shared by the JVM. One warm `feature_adhoc` pass
+      // (7 requests) compiles about 200 distinct classes, so at 100 every
+      // class is evicted before its next use: the check dump compiled
+      // 191, the warm-up pass 81 more and every later pass 43-106, and
+      // Janino was the top frame of the timed loop (61 of 390 JFR
+      // samples, 45 more in its class lookups). At 2000 the warm-up pass
+      // compiled 4 and later passes 0-8; 1000 is about 5x the measured
+      // working set. graft.Bench needs it as well: it times each entry
+      // twice and keeps the faster pass, which is warm only if the
+      // entry's classes outlive its first pass. A static conf: it takes
+      // effect only here, before the first query compiles.
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // ALWAYS have a checkpoint dir: MLlib's iterative fitters
@@ -104,23 +116,22 @@ object Sessions {
     * eagerly (stream drains, checkpoints); the returned frame plans and
     * runs under the caller's conf, like any other query's.
     *
-    * A clone that starts a stream adds a StreamingQueryListenerBus to
-    * the context's listener bus, and Spark never removes it (the context
-    * cleaner drops only ExecutionListenerBuses), so it would receive
-    * every later event for the life of the JVM. The stream buses added
+    * A clone adds its own buses to the context's listener bus: a
+    * StreamingQueryListenerBus when it starts a stream, which Spark never
+    * removes, and an ExecutionListenerBus when the caller has a
+    * QueryExecutionListener (the clone copies it), which only the context
+    * cleaner removes, at some GC after the clone is collected. Either
+    * would sit on the context's bus after the call. The buses added
     * while `f` ran are removed once it returns, when its streams have
-    * stopped. That diff would also remove the bus of a concurrent scoped
-    * stream on the same context. */
+    * stopped, after the events already posted have reached them. That
+    * diff would also remove the bus of a concurrent scoped call on the
+    * same context. */
   def scoped(spark: SparkSession, conf: (String, String)*)(
       f: SparkSession => DataFrame): DataFrame = {
     val before = SessionBridge.listeners(spark).toSet
     val s = SessionBridge.cloneOf(spark)
     conf.foreach { case (k, v) => s.conf.set(k, v) }
     try SessionBridge.bind(f(s), spark)
-    finally SessionBridge.listeners(spark).foreach {
-      case b: StreamingQueryListenerBus if !before(b) =>
-        spark.sparkContext.removeSparkListener(b)
-      case _ =>
-    }
+    finally SessionBridge.removeSessionBuses(spark, before)
   }
 }

@@ -192,7 +192,7 @@ object Sinks {
         concat(lit("["), concat_ws(",", $"items"), lit("]")).as("recommend"))
     val tmp = scratchDir("k4")
     kv.write.mode("overwrite").parquet(s"$tmp/kv")
-    spark.read.parquet(s"$tmp/kv")
+    Tables.parquet(spark, s"$tmp/kv")
   }
 
   /** K7 + F11: sigmoid scores dumped as text lines
@@ -318,7 +318,7 @@ object Sinks {
       .select($"o_orderkey", (dec2($"o_totalprice") * 100).cast("long").as("cents"))
       .repartition(64)
       .write.mode("overwrite").parquet(s"$tmp/small")
-    val small = spark.read.parquet(s"$tmp/small")
+    val small = Tables.parquet(spark, s"$tmp/small")
     // ONE pre-compaction scan for both stats (input_file_name() is
     // non-deterministic to Catalyst — project it to a column BEFORE
     // aggregating over it)
@@ -328,7 +328,7 @@ object Sinks {
     val target = math.max(1L, (n + 19999L) / 20000L)
     small.repartition(target.toInt).write.mode("overwrite")
       .parquet(s"$tmp/compacted")
-    val back = spark.read.parquet(s"$tmp/compacted")
+    val back = Tables.parquet(spark, s"$tmp/compacted")
       .withColumn("f", input_file_name())
     // per-FILE grain first, then a file-count-sized reduce: one
     // distinct per aggregate level — two countDistincts in one agg
@@ -416,7 +416,7 @@ object Sinks {
       .toDF("status", "phase")
       .write.mode("overwrite").parquet(dimPath)
     spark.read.parquet(base)
-      .join(broadcast(spark.read.parquet(dimPath)
+      .join(broadcast(Tables.parquet(spark, dimPath)
         .filter($"phase" === "closed")),
         $"o_orderstatus" === $"status")
       .groupBy($"o_orderstatus".cast("string").as("o_orderstatus"))

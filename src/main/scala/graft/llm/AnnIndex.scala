@@ -155,6 +155,10 @@ object AnnIndex {
   private def fpPrefix(dir: String): String =
     s"${Paths.get(dir).toAbsolutePath.normalize}::"
 
+  /** Whether the corpus path a fingerprint line names still exists. */
+  private def corpusExists(fpLine: String): Boolean =
+    Files.exists(Paths.get(fpLine.split("::", 2)(0)))
+
   private def fsListing(dir: String): String = {
     val p = Paths.get(dir, "embeddings.parquet")
     if (Files.isDirectory(p)) {
@@ -225,8 +229,11 @@ object AnnIndex {
     *    this path now resolves to `keepSig`, so they are stale. A dir
     *    that several paths resolved to (a corpus and a byte copy of it)
     *    is then pruned once every one of them has moved on, instead of
-    *    being kept forever by another path's old line. The store is
-    *    therefore bounded at one dir per corpus path.
+    *    being kept forever by another path's old line. A line whose
+    *    corpus path no longer exists is stale too and is dropped with
+    *    them: a deleted corpus is never ensured again, so its line would
+    *    otherwise pin its dir forever. The store is therefore bounded at
+    *    one dir per live corpus path.
     *  - sweep `_tmp-*` leftovers from writers that died between the
     *    parquet write and the rename. Only dead writers' temps are
     *    swept (pid suffix no longer alive) — a live concurrent
@@ -242,7 +249,7 @@ object AnnIndex {
         val n = p.getFileName.toString
         val staleSig = n.startsWith("sig=") && n != keep && {
           val fps = fpLines(p)
-          val others = fps.filterNot(_.startsWith(mine))
+          val others = fps.filterNot(l => l.startsWith(mine) || !corpusExists(l))
           if (others.nonEmpty && others.size < fps.size) {
             val tmp = p.resolve(s"_FP.tmp-${ProcessHandle.current().pid()}")
             Files.write(tmp, others.asJava)
@@ -401,18 +408,14 @@ object AnnIndex {
       Seq(centsDf(spark, coarse), booksDf(spark, books), codes.coalesce(8))
     }
 
-  /** The one artifact reader: a persisted component as a DataFrame. */
-  private def read(spark: SparkSession, p: String): DataFrame =
-    spark.read.parquet(p)
-
   private def loadCents(spark: SparkSession,
                         p: String): Array[Array[Double]] =
-    read(spark, p).select("list_id", "cent").collect()
+    Tables.parquet(spark, p).select("list_id", "cent").collect()
       .sortBy(_.getInt(0)).map(_.getSeq[Double](1).toArray)
 
   private def loadBooks(spark: SparkSession,
                         p: String): Array[Array[Array[Double]]] =
-    read(spark, p).select("sub", "code", "cent").collect()
+    Tables.parquet(spark, p).select("sub", "code", "cent").collect()
       .groupBy(_.getInt(0)).toArray.sortBy(_._1)
       .map(_._2.sortBy(_.getInt(1)).map(_.getSeq[Double](2).toArray))
 
@@ -420,30 +423,30 @@ object AnnIndex {
   def ensurePq(spark: SparkSession, dir: String)
       : (Array[Array[Array[Double]]], DataFrame) = {
     val p = pqPaths(spark, dir)
-    (loadBooks(spark, p("books")), read(spark, p("codes")))
+    (loadBooks(spark, p("books")), Tables.parquet(spark, p("codes")))
   }
 
   /** The PQ codebook TABLE (sub, code, cent), for in-plan encoders. */
   def pqBooks(spark: SparkSession, dir: String): DataFrame =
-    read(spark, pqPaths(spark, dir)("books"))
+    Tables.parquet(spark, pqPaths(spark, dir)("books"))
 
   /** IVF centroids on the driver + the inverted-list table. */
   def ensureIvf(spark: SparkSession, dir: String)
       : (Array[Array[Double]], DataFrame) = {
     val p = ivfPaths(spark, dir)
-    (loadCents(spark, p("cents")), read(spark, p("codes")))
+    (loadCents(spark, p("cents")), Tables.parquet(spark, p("codes")))
   }
 
   /** The IVF inverted-list table (vec_id, list_id) alone. */
   def ivfCodes(spark: SparkSession, dir: String): DataFrame =
-    read(spark, ivfPaths(spark, dir)("codes"))
+    Tables.parquet(spark, ivfPaths(spark, dir)("codes"))
 
   /** IVF-PQ centroids and residual codebooks on the driver + codes. */
   def ensureIvfPq(spark: SparkSession, dir: String)
       : (Array[Array[Double]], Array[Array[Array[Double]]], DataFrame) = {
     val p = ivfPqPaths(spark, dir)
     (loadCents(spark, p("cents")), loadBooks(spark, p("books")),
-      read(spark, p("codes")))
+      Tables.parquet(spark, p("codes")))
   }
 
   // ---- SemDeDup cluster artifact (kind "sem") -----------------------
@@ -470,7 +473,7 @@ object AnnIndex {
     * the complete replayable contract and the tier needs no codes
     * component. */
   def semCents(spark: SparkSession, dir: String): DataFrame =
-    read(spark, semPaths(spark, dir)("cents"))
+    Tables.parquet(spark, semPaths(spark, dir)("cents"))
 
   private def semPaths(spark: SparkSession, dir: String): Map[String, String] =
     ensure(spark, dir, "sem", "cents") { s =>

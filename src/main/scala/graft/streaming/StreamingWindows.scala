@@ -647,11 +647,11 @@ object StreamingWindows {
       .agg(array_sort(collect_list(struct(col("code"), col("cent"))))
         .as("cents"))
       .withColumn("one", lit(1))
-    // Schema from a one-off batch read, not a hand-written literal
+    // Schema from the table loader, not a hand-written literal
     // (ADVICE r12): if the testdata generator changes an element type
-    // (e.g. float→double) the batch twin adapts via inference and a
-    // hardcoded stream schema would break alone at runtime.
-    val embSchema = spark.read.parquet(s"$dir/embeddings.parquet").schema
+    // (e.g. float→double) the batch twin adapts via the file's footer
+    // and a hardcoded stream schema would break alone at runtime.
+    val embSchema = graft.Tables.load(spark, dir, "embeddings").schema
     val stream = readAllParquetStream(spark, s"$dir/embeddings.parquet",
         embSchema)
       .filter(graft.llm.TextOps.hash48(

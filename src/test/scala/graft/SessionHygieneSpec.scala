@@ -1,9 +1,12 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
 import org.apache.spark.sql.{SessionBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Ascending, AttributeReference}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.storage.StorageLevel
 
 import graft.llm.Dedup
@@ -22,8 +25,10 @@ import graft.queries.Analytics
   * Covered: the two SQL-text queries (they register their tables as
   * temp views), every stateful drain (their state-partition count and
   * memory-sink views), the iterative dedup in both checkpoint modes,
-  * and the keyed branch of `pinKeyed` (its AQE-off checkpoint), which
-  * only runs above 64 MB of lineitem and so is called directly.
+  * scoped calls under a caller with a QueryExecutionListener (the
+  * clone's listener bus), and the keyed branch of `pinKeyed` (its
+  * AQE-off checkpoint), which only runs above 64 MB of lineitem and so
+  * is called directly.
   */
 class SessionHygieneSpec extends SparkSpec {
   import SessionHygieneSpec.State
@@ -67,6 +72,28 @@ class SessionHygieneSpec extends SparkSpec {
       assertLeavesSessionAsFound(name)(s =>
         assert(SparkEntry.queries(name)(s, sf).collect().nonEmpty))
     }
+
+  test("scoped calls leave no bus behind for the caller's QueryExecutionListener") {
+    // The clone copies the caller's listener and starts its own
+    // ExecutionListenerBus for it, which only a GC used to remove.
+    val s = spark.newSession()
+    val ends = new AtomicInteger
+    val l = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        ends.incrementAndGet()
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    s.listenerManager.register(l)
+    try {
+      val before = state(s).listeners
+      Sessions.scoped(s) { c => c.range(5).collect(); c.range(3).toDF() }.collect()
+      assert(ends.get >= 1, "the clone's query end must reach the listener")
+      Tables.sql(s, sf, "region")("SELECT count(*) FROM region").collect()
+      assert(state(s).listeners == before,
+        s"scoped calls left ${state(s).listeners - before} listener(s) on the " +
+          "context's bus")
+    } finally s.listenerManager.unregister(l)
+  }
 
   test("Dedup's reliable mode checkpoints without moving the checkpoint dir") {
     assertLeavesSessionAsFound("reliable nearDupClusters")(s =>

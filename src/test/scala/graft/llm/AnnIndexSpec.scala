@@ -109,7 +109,9 @@ class AnnIndexSpec extends SparkSpec {
     }
     val mine = s"${Paths.get(sf01).toAbsolutePath.normalize}::"
     val stale = cur.map(plant(_, "500_1_1", mine + "an-earlier-listing"))
-    val elsewhere = "/elsewhere/corpus::listing"
+    // a live corpus path: the line of a deleted one is stale by itself
+    val corpus = tmpDir("graft-annidx-elsewhere")
+    val elsewhere = s"$corpus::listing"
     val other = cur.map(plant(_, "500_2_2",
       s"$elsewhere\n${mine}an-earlier-listing"))
     try {
@@ -122,7 +124,30 @@ class AnnIndexSpec extends SparkSpec {
       assert(other.forall(d =>
         Files.readAllLines(d.resolve("_FP")).asScala == Seq(elsewhere)),
         "sf0.01's stale fingerprint must be dropped")
-    } finally (stale ++ other).foreach(graft.util.Scratch.deleteRecursively)
+    } finally (stale ++ other :+ corpus).foreach(graft.util.Scratch.deleteRecursively)
+  }
+
+  test("a deleted corpus's artifacts are pruned by the next ensure") {
+    // A temp corpus of sf0.001's ids with shifted vectors: same row count,
+    // its own sig, so its ensure trains its own dirs. Once the corpus is
+    // deleted nothing ensures it again; the next ensure of another corpus
+    // must still prune its dirs.
+    import spark.implicits._
+    val d = tmpDir("graft-annidx-gone")
+    graft.Tables.load(spark, sf001, "embeddings")
+      .select($"vec_id",
+        org.apache.spark.sql.functions.transform($"embedding", x => x + 0.5f)
+          .as("embedding"))
+      .write.parquet(s"$d/embeddings.parquet")
+    val gone = try pqDirs(d.toString) finally graft.util.Scratch.deleteRecursively(d)
+    assert(gone.forall(g => AnnIndex.ready(g.toString)))
+    val sig001 = s"sig=${AnnIndex.sig(spark, sf001)}"
+    assert(gone.forall(_.getFileName.toString != sig001))
+    try {
+      pqDirs(sf001)
+      assert(gone.forall(!Files.exists(_)),
+        "the deleted corpus's artifacts must be pruned")
+    } finally gone.foreach(graft.util.Scratch.deleteRecursively)
   }
 
   test("a corpus with the same row count keeps the other's artifacts") {
