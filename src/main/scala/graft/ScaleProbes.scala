@@ -104,7 +104,7 @@ object ScaleProbes {
             .groupBy($"band", $"bucket").count()
             .agg(count(lit(1)), max($"count"), sum($"count" * ($"count" - 1) / 2)).head()
           val (survivors, t) = timed(Dedup.embeddingNearDupLsh(spark, d,
-            bands = Similarity.LshBands, bitsPerBand = bits).count())
+            bitsPerBand = bits).count())
           println(f"[lsh-probe] $lbl $label r=$bits: buckets=${st.get(0)} " +
             f"maxBucket=${st.get(1)} generatedPairs=${st.get(2)} " +
             f"survivingPairs(cos≥0.30)=$survivors time=$t%.2f s")

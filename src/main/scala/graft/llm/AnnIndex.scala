@@ -183,8 +183,19 @@ object AnnIndex {
     s"$base/$kind/$component/sig=$s"
 
   /** Oracle-side glob for a component (all sigs; the oracle filters). */
-  def componentGlob(kind: String, component: String): String =
+  private def componentGlob(kind: String, component: String): String =
     s"$base/$kind/$component/sig=*/*.parquet"
+
+  /** The DuckDB read of one stored component as a CTE body: `cols` of
+    * the `sig=` partition whose sig equals the one-row `sg` CTE's (a
+    * [[sigSql]] body the caller stages). Every oracle reads the store
+    * through this, so the store's layout is spelled only here. */
+  private[llm] def componentSql(kind: String, component: String, cols: String,
+                                 sg: String): String =
+    s"""SELECT $cols
+       |       FROM read_parquet('${componentGlob(kind, component)}',
+       |                         hive_partitioning = 1), $sg
+       |       WHERE sig = $sg.s""".stripMargin
 
   private[llm] def ready(p: String): Boolean =
     Files.exists(Paths.get(p, "_SUCCESS"))

@@ -63,20 +63,36 @@ object Dedup {
     * token stream never shuffles, and candidate volume is bounded by
     * (eval postings × matching corpus postings), never corpus×corpus.
     * Demo eval set: doc_id % 50 == 0 (2% of the corpus). */
-  def contamination(spark: SparkSession, dir: String,
-                    minShared: Long = 2L): DataFrame = {
+  def contamination(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val posts = docShingles(spark, dir)
-      .select($"doc_id", explode($"sh").as("s0"))
-      .select($"doc_id", TextOps.hash48($"s0").as("tok"))
+    val posts = shingleTokens(docShingles(spark, dir), $"doc_id", $"sh")
       .distinct() // guard 48-bit collisions, same as the ngram path
     val evalPosts = posts.filter($"doc_id" % 50 === 0)
       .select($"doc_id".as("eval_id"), $"tok")
-    posts.filter($"doc_id" % 50 =!= 0)
-      .join(broadcast(evalPosts), "tok")
-      .groupBy($"doc_id", $"eval_id")
+    sharedCounts(posts.filter($"doc_id" % 50 =!= 0)
+      .join(broadcast(evalPosts), "tok"))
+  }
+
+  /** Shared shingles a contaminated doc needs with an eval doc. */
+  private val MinShared = 2L
+
+  /** (doc_id, eval_id, n_shared) of the joined (doc_id, eval_id, tok)
+    * rows, kept at ≥ [[MinShared]] — the one verdict both
+    * decontamination spellings emit. */
+  private def sharedCounts(joined: DataFrame): DataFrame =
+    joined.groupBy(col("doc_id"), col("eval_id"))
       .agg(count(lit(1)).as("n_shared"))
-      .filter($"n_shared" >= minShared)
+      .filter(col("n_shared") >= MinShared)
+
+  /** Every shingle occurrence of `docs` as (id, tok = 48-bit shingle
+    * hash): the token stream both decontamination spellings join on.
+    * `id` is the doc_id column, renamed where the eval side needs it;
+    * `sh` is the doc's shingle set, computed from `text` unless `docs`
+    * already carries it. */
+  private def shingleTokens(docs: DataFrame, id: Column,
+                            sh: Column = shingles(toks(col("text")))): DataFrame = {
+    val occ = docs.select(id, explode(sh).as("s0"))
+    occ.select(col(occ.columns.head), hash48(col("s0")).as("tok"))
   }
 
   /** Scale twin of [[contamination]] for when the eval set has outgrown a
@@ -99,13 +115,11 @@ object Dedup {
     * At 100 TB the win is (3): without it every corpus (doc_id, shingle)
     * pair shuffles for the distinct/join; with it the shuffle carries
     * only tokens that might be eval tokens. */
-  def contaminationBloom(spark: SparkSession, dir: String,
-                         minShared: Long = 2L): DataFrame = {
+  def contaminationBloom(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val evalSh = Tables.load(spark, dir, "documents")
-      .filter($"doc_id" % 50 === 0)
-      .select($"doc_id".as("eval_id"), explode(shingles(toks($"text"))).as("s0"))
-      .select($"eval_id", TextOps.hash48($"s0").as("tok"))
+    val docs = Tables.load(spark, dir, "documents")
+    val evalSh = shingleTokens(docs.filter($"doc_id" % 50 === 0),
+        $"doc_id".as("eval_id"))
       .distinct()
       // three consumers (count, bloom aggregate, exact-verify join) —
       // materialize the eval side once instead of re-running the eval
@@ -115,30 +129,52 @@ object Dedup {
     val bfBytes = evalSh
       .agg(call_function("graft_bloom_agg", $"tok", lit(nEval)).as("bf"))
       .head().getAs[Array[Byte]](0)
-    Tables.load(spark, dir, "documents")
-      .filter($"doc_id" % 50 =!= 0)
-      .select($"doc_id", explode(shingles(toks($"text"))).as("s0"))
-      .select($"doc_id", TextOps.hash48($"s0").as("tok"))
+    sharedCounts(shingleTokens(docs.filter($"doc_id" % 50 =!= 0), $"doc_id")
       .filter(call_function("graft_might_contain", lit(bfBytes), $"tok"))
       .distinct() // guard 48-bit collisions, post-probe so it's survivors-only
-      .join(evalSh, "tok")
-      .groupBy($"doc_id", $"eval_id")
-      .agg(count(lit(1)).as("n_shared"))
-      .filter($"n_shared" >= minShared)
+      .join(evalSh, "tok"))
   }
 
   /** Exact Jaccard on candidate pairs given per-doc shingle arrays. */
-  private def jaccardOnPairs(pairs: DataFrame, sh: DataFrame): DataFrame = {
-    val a = sh.select(col("doc_id").as("id_a"), col("sh").as("sh_a"))
-    val b = sh.select(col("doc_id").as("id_b"), col("sh").as("sh_b"))
-    pairs
-      .join(a, "id_a").join(b, "id_b")
+  private def jaccardOnPairs(pairs: DataFrame, sh: DataFrame): DataFrame =
+    attach(pairs, sh, "doc_id", "sh", "sh_")
       .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))))
       .withColumn("jaccard",
         col("inter").cast("double") /
           (size(col("sh_a")) + size(col("sh_b")) - col("inter")))
       .select(col("id_a"), col("id_b"), col("jaccard"))
-  }
+
+  /** `pairs(id_a, id_b, …)` with `side`'s `v` attached to both ends by
+    * its `id`: as `<prefix>a` for id_a and `<prefix>b` for id_b. Pairs
+    * travel as ids through candidate generation; values attach once,
+    * after the distinct. */
+  private def attach(pairs: DataFrame, side: DataFrame, id: String,
+                     v: String, prefix: String): DataFrame =
+    pairs
+      .join(side.select(col(id).as("id_a"), col(v).as(s"${prefix}a")), Seq("id_a"))
+      .join(side.select(col(id).as("id_b"), col(v).as(s"${prefix}b")), Seq("id_b"))
+
+  /** Candidate pairs of rows sharing a bucket: `rows` grouped on `keys`,
+    * each bucket's sorted `id` list of ≥ 2 expanded by [[orderedPairs]],
+    * deduplicated across buckets → (id_a, id_b) with id_a < id_b. The one
+    * candidate generator of the banded near-dup paths (minhash bands,
+    * simhash block pairs, embedding sign-LSH bands). */
+  private def bucketPairs(rows: DataFrame, id: String, keys: Column*): DataFrame =
+    rows.groupBy(keys: _*)
+      .agg(sort_array(collect_list(col(id))).as("ids"))
+      .filter(size(col("ids")) >= 2)
+      .select(explode(orderedPairs(col("ids"))).as("p"))
+      .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
+      .distinct()
+
+  /** `table` with each row's component label attached as `out`: the
+    * [[connectedComponents]] `lbl` of its `id`, or the id itself for a
+    * row no pair touched (a singleton is its own cluster). */
+  private def clusterLabels(table: DataFrame, id: String, labels: DataFrame,
+                            out: String, lbl: String = "canonical_id"): DataFrame =
+    table.join(labels.select(col("id").as(id), col("lbl").as(lbl)), Seq(id),
+        "left_outer")
+      .select(table.columns.map(col) :+ coalesce(col(lbl), col(id)).as(out): _*)
 
   /** Materialize an intermediate for iterative reuse. Local mode (the
     * default) uses `localCheckpoint()` — blocks live un-replicated in
@@ -283,11 +319,11 @@ object Dedup {
     * md5-derived, so the ENTIRE LSH path (not just the verify) is
     * oracle-checkable.
     *
-    * Shape notes (round-3 rework):
+    * Shape notes:
     *  - The signature subtree is computed ONCE: bands come from a single
-    *    posexplode over the sig table, not a 4-way union self-joined on
-    *    band equality (the round-2 spelling recomputed the aggregation
-    *    8× — 4 bands × 2 join sides — and cost 10.9 s at sf0.1).
+    *    explode over the sig table, not a 4-way union self-joined on
+    *    band equality (that spelling recomputes the aggregation 8× —
+    *    4 bands × 2 join sides — and cost 10.9 s at sf0.1).
     *  - Docs with <3 tokens have the empty-set signature (2^48 in every
     *    slot); left in, they ALL share every band bucket — a quadratic
     *    blowup among short docs violating this file's no-all-pairs
@@ -305,14 +341,8 @@ object Dedup {
       struct(lit(b).as("band"), col(s"s${2 * b}").as("v1"),
         col(s"s${2 * b + 1}").as("v2"))
     }: _*)
-    val posts = sig.select($"doc_id", explode(bandStructs).as("bd"))
-      .groupBy($"bd.band", $"bd.v1", $"bd.v2")
-      .agg(sort_array(collect_list($"doc_id")).as("ids"))
-      .filter(size($"ids") >= 2)
-    val cand = posts
-      .select(explode(orderedPairs($"ids")).as("p"))
-      .select($"p.id_a".as("id_a"), $"p.id_b".as("id_b"))
-      .distinct()
+    val cand = bucketPairs(sig.select($"doc_id", explode(bandStructs).as("bd")),
+      "doc_id", $"bd.band", $"bd.v1", $"bd.v2")
     jaccardOnPairs(cand, sh).filter(col("jaccard") >= threshold)
   }
 
@@ -324,8 +354,8 @@ object Dedup {
     * (10 bands of 18-20 bits). ≤ maxHamming differing bits dirty at
     * most maxHamming blocks, leaving ≥ 2 clean blocks — so SOME pair of
     * clean blocks agrees exactly and recall is guaranteed (unlike
-    * MinHash banding, which is probabilistic). vs the round-6 single-
-    * block banding (maxHamming+1 bands of 12 bits): output is
+    * MinHash banding, which is probabilistic). vs single-block
+    * banding (maxHamming+1 bands of 12 bits): output is
     * IDENTICAL — both schemes have guaranteed recall and the same
     * hamming verify — but random (non-near-dup) band collisions have a
     * birthday floor of n²/2^bits per band, and the 10× gate measured
@@ -364,18 +394,10 @@ object Dedup {
     val bandArr = array(blockPairs.map { case (a, b) =>
       shiftleft(block(a), widths(b)) + block(b)
     }: _*)
-    val posts = sim.select($"doc_id", posexplode(bandArr))
-      .select($"doc_id", $"pos".as("band"), $"col".as("key"))
-      .groupBy($"band", $"key")
-      .agg(sort_array(collect_list($"doc_id")).as("ids"))
-      .filter(size($"ids") >= 2)
-    val cand = posts
-      .select(explode(orderedPairs($"ids")).as("p"))
-      .select($"p.id_a".as("id_a"), $"p.id_b".as("id_b"))
-      .distinct()
-    val a = sim.select($"doc_id".as("id_a"), $"simhash".as("sim_a"))
-    val b = sim.select($"doc_id".as("id_b"), $"simhash".as("sim_b"))
-    cand.join(a, Seq("id_a")).join(b, Seq("id_b"))
+    val cand = bucketPairs(sim.select($"doc_id", posexplode(bandArr))
+        .select($"doc_id", $"pos".as("band"), $"col".as("key")),
+      "doc_id", $"band", $"key")
+    attach(cand, sim, "doc_id", "simhash", "sim_")
       .withColumn("hamming", bit_count($"sim_a".bitwiseXOR($"sim_b")))
       .filter($"hamming" <= maxHamming)
       .select($"id_a", $"id_b", $"hamming".cast("long").as("hamming"))
@@ -463,31 +485,24 @@ object Dedup {
       labels = next
       round += 1
     }
+    // pointer jumping converges in O(log n) rounds, so hitting the cap
+    // means something is genuinely pathological — never emit split
+    // components as if they were final.
     if (changed)
-      // pointer jumping converges in O(log n) rounds, so hitting the cap
-      // means something is genuinely pathological — never silently emit
-      // split components as if they were final.
-      System.err.println(s"[dedup_clusters] NOT CONVERGED after $maxRounds " +
-        s"rounds (label sum still decreasing); components may be split")
-    else
-      // one line per run, not per round: the operational signal (and the
-      // scale-probe's datum) is rounds-to-converge vs corpus size.
-      System.err.println(s"[dedup_clusters] converged in $round rounds")
+      throw new IllegalStateException(s"connected components not converged " +
+        s"after $maxRounds rounds (label sum still decreasing)")
+    // one line per run, not per round: the operational signal (and the
+    // scale-probe's datum) is rounds-to-converge vs corpus size.
+    System.err.println(s"[dedup_clusters] converged in $round rounds")
     labels
   }
 
   def nearDupClusters(spark: SparkSession, dir: String,
                       threshold: Double = 0.8,
-                      maxRounds: Int = 25,
-                      reliable: Boolean = false): DataFrame = {
-    import spark.implicits._
-    val labels = connectedComponents(
-      ngramJaccard(spark, dir, threshold), maxRounds, reliable)
-    Tables.load(spark, dir, "documents").select($"doc_id")
-      .join(labels.select($"id".as("doc_id"), $"lbl".as("canonical_id")),
-        Seq("doc_id"), "left_outer")
-      .select($"doc_id", coalesce($"canonical_id", $"doc_id").as("canonical_id"))
-  }
+                      reliable: Boolean = false): DataFrame =
+    clusterLabels(Tables.load(spark, dir, "documents").select("doc_id"),
+      "doc_id", connectedComponents(ngramJaccard(spark, dir, threshold),
+        reliable = reliable), "canonical_id")
 
   /** Cluster canonicalization — the KEEP decision that turns near-dup
     * clusters into a deduplicated corpus: one row per cluster naming
@@ -503,16 +518,11 @@ object Dedup {
     * an independent plan. */
   def canonicalKeep(spark: SparkSession, dir: String,
                     threshold: Double = 0.8,
-                    maxRounds: Int = 25,
                     reliable: Boolean = false): DataFrame = {
     import spark.implicits._
-    val labels = connectedComponents(
-      ngramJaccard(spark, dir, threshold), maxRounds, reliable)
-    Tables.load(spark, dir, "documents").select($"doc_id", $"n_chars")
-      .join(labels.select($"id".as("doc_id"), $"lbl"), Seq("doc_id"),
-        "left_outer")
-      .select($"doc_id", $"n_chars",
-        coalesce($"lbl", $"doc_id").as("cluster_id"))
+    clusterLabels(Tables.load(spark, dir, "documents").select("doc_id", "n_chars"),
+        "doc_id", connectedComponents(ngramJaccard(spark, dir, threshold),
+          reliable = reliable), "cluster_id", lbl = "lbl")
       .groupBy($"cluster_id")
       .agg(max(struct($"n_chars", $"doc_id")).as("k"),
         count(lit(1)).as("n_members"))
@@ -526,17 +536,10 @@ object Dedup {
     * [[nearDupClusters]]); same canonical-id contract, same recursive-CTE
     * oracle shape. */
   def simhashClusters(spark: SparkSession, dir: String,
-                      maxHamming: Int = 3,
-                      maxRounds: Int = 25,
-                      reliable: Boolean = false): DataFrame = {
-    import spark.implicits._
-    val labels = connectedComponents(
-      simhashDedup(spark, dir, maxHamming, reliable), maxRounds, reliable)
-    Tables.load(spark, dir, "documents").select($"doc_id")
-      .join(labels.select($"id".as("doc_id"), $"lbl".as("canonical_id")),
-        Seq("doc_id"), "left_outer")
-      .select($"doc_id", coalesce($"canonical_id", $"doc_id").as("canonical_id"))
-  }
+                      reliable: Boolean = false): DataFrame =
+    clusterLabels(Tables.load(spark, dir, "documents").select("doc_id"),
+      "doc_id", connectedComponents(simhashDedup(spark, dir, reliable = reliable),
+        reliable = reliable), "canonical_id")
 
   /** Incremental near-dup: dedupe a NEW ingest batch against itself AND
     * the existing corpus WITHOUT re-pairing the corpus — the production
@@ -583,17 +586,10 @@ object Dedup {
     * Same recursive-CTE oracle shape, nesting the fully-oracled
     * `dedup_embedding_lsh` pair statement. */
   def embeddingClusters(spark: SparkSession, dir: String,
-                        threshold: Double = 0.30,
-                        maxRounds: Int = 25,
-                        reliable: Boolean = false): DataFrame = {
-    import spark.implicits._
-    val labels = connectedComponents(
-      embeddingNearDupLsh(spark, dir, threshold), maxRounds, reliable)
-    Tables.load(spark, dir, "embeddings").select($"vec_id")
-      .join(labels.select($"id".as("vec_id"), $"lbl".as("canonical_id")),
-        Seq("vec_id"), "left_outer")
-      .select($"vec_id", coalesce($"canonical_id", $"vec_id").as("canonical_id"))
-  }
+                        reliable: Boolean = false): DataFrame =
+    clusterLabels(Tables.load(spark, dir, "embeddings").select("vec_id"),
+      "vec_id", connectedComponents(embeddingNearDupLsh(spark, dir),
+        reliable = reliable), "canonical_id")
 
   /** SemDeDup — semantic dedup by CLUSTER-THEN-PRUNE (Abbas et al.
     * 2023, "SemDeDup: Data-efficient learning at web-scale through
@@ -662,8 +658,7 @@ object Dedup {
   /** Library variant: Spark ML HashingTF + MinHashLSH approxSimilarityJoin
     * (different hash family → no SQL oracle; rows-only check). Kept
     * alongside the native path to cover the `ml.feature` surface. */
-  def minhashMl(spark: SparkSession, dir: String,
-                jaccardDistance: Double = 0.4): DataFrame = {
+  def minhashMl(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val sh = docShingles(spark, dir)
       .filter(size($"sh") > 0)
@@ -673,7 +668,7 @@ object Dedup {
     val lsh = new MinHashLSH().setInputCol("tf").setOutputCol("mh")
       .setNumHashTables(4).setSeed(42L)
     val model = lsh.fit(vecs)
-    model.approxSimilarityJoin(vecs, vecs, jaccardDistance, "dist")
+    model.approxSimilarityJoin(vecs, vecs, 0.4, "dist")
       .select(col("datasetA.doc_id").as("id_a"),
               col("datasetB.doc_id").as("id_b"),
               col("dist"))
@@ -711,32 +706,22 @@ object Dedup {
     * cosine only on the distinct candidate pairs. This is the scale path
     * the probe-subset query above verifies: per-bucket join fanout is
     * (n/2^r)² per band instead of n², with bits-per-band sized to the
-    * corpus ADAPTIVELY ([[Similarity.gateBits]]; the round-8 10× gate
-    * measured the previously-pinned r=4 at ×96 on 10× data — the exact
-    * fixed-r failure mode the scaladoc predicted; the oracle follows the
-    * adaptive r via COUNT(*)-driven bit masking). OR-combined bands are
-    * the recall lever (round 2 was single-band → pairs split by one
-    * hyperplane were lost; see [[Similarity.LshBands]] for the
+    * corpus ADAPTIVELY ([[Similarity.gateBits]]; a pinned r=4 measured
+    * ×96 candidates on 10× data, the fixed-r failure mode; the oracle
+    * follows the adaptive r via COUNT(*)-driven bit masking).
+    * OR-combined bands are the recall lever (a single band loses every
+    * pair one hyperplane splits; see [[Similarity.LshBands]] for the
     * recall-vs-r regime discussion). Candidate generation shuffles only
     * (band, bucket, vec_id) — vectors are attached after the distinct. */
   def embeddingNearDupLsh(spark: SparkSession, dir: String,
                           threshold: Double = 0.30,
-                          bands: Int = Similarity.LshBands,
                           bitsPerBand: Int = 0): DataFrame = {
     import spark.implicits._
     val r = if (bitsPerBand > 0) bitsPerBand else Similarity.gateBits(spark, dir)
-    val posts = Similarity.bandBuckets(spark, dir, bands, r)
-      .groupBy($"band", $"bucket")
-      .agg(sort_array(collect_list($"vec_id")).as("ids"))
-      .filter(size($"ids") >= 2)
-    val cand = posts
-      .select(explode(orderedPairs($"ids")).as("p"))
-      .select($"p.id_a".as("id_a"), $"p.id_b".as("id_b"))
-      .distinct()
-    val e = Similarity.emb(spark, dir)
-    cand
-      .join(e.select($"vec_id".as("id_a"), $"v".as("va")), Seq("id_a"))
-      .join(e.select($"vec_id".as("id_b"), $"v".as("vb")), Seq("id_b"))
+    val cand = bucketPairs(
+      Similarity.bandBuckets(spark, dir, Similarity.LshBands, r),
+      "vec_id", $"band", $"bucket")
+    attach(cand, Similarity.emb(spark, dir), "vec_id", "v", "v")
       .withColumn("cosine", Similarity.dot($"va", $"vb"))
       .filter($"cosine" >= threshold)
       .select($"id_a", $"id_b", $"cosine")
@@ -773,16 +758,16 @@ object Dedup {
     val L = 40
     val docs = Tables.load(spark, dir, "documents")
     // Anchor positions = 1 + the position after every space, computed
-    // as a RUNNING OFFSET over split(" ") parts (r13): the previous
-    // spelling filtered sequence(1, n) with a substr(p-1, 1) probe per
-    // position, and UTF8String.substring is O(p) (it walks bytes to
-    // find the char boundary), making anchor extraction O(n²) chars
-    // per doc. The running-offset aggregate reads each token's LENGTH
+    // as a RUNNING OFFSET over split(" ") parts: filtering
+    // sequence(1, n) with a substr(p-1, 1) probe per position instead
+    // costs O(p) per probe (UTF8String.substring walks bytes to find
+    // the char boundary), making anchor extraction O(n²) chars per
+    // doc. The running-offset aggregate reads each token's LENGTH
     // once, but each fold step's concat(acc, array(...)) copies the
-    // accumulator — O(t²) element copies in the TOKEN count (ADVICE
-    // r13: not linear; a far cheaper constant than the old O(p)
-    // per-char substr probe, and t ≪ n chars, but pathological
-    // 100k-token docs would pay quadratic copies here). Split keeps
+    // accumulator — O(t²) element copies in the TOKEN count: not
+    // linear, a far cheaper constant than the per-char substr probe
+    // and t ≪ n chars, but pathological 100k-token docs would pay
+    // quadratic copies here. Split keeps
     // trailing/consecutive empties (limit = -1), so a run
     // of spaces yields exactly the same anchor per space as the probe
     // did. The window hash itself still pays one O(p) substr per
@@ -878,6 +863,34 @@ object Dedup {
     s"""WITH t AS (SELECT doc_id, $ToksSql AS w FROM documents),
        |s AS (SELECT doc_id, $ShinglesSql AS sh FROM t)""".stripMargin
 
+  /** Distinct (doc_id, tok) shingle-hash postings of `s` — the oracle
+    * side of [[shingleTokens]] + distinct. */
+  private val invCteSql: String =
+    s"""inv AS (SELECT DISTINCT doc_id, tok FROM (
+       |  SELECT doc_id, unnest(list_transform(sh, s -> ${hash48Sql("s")})) AS tok FROM s))""".stripMargin
+
+  /** The shingle pair-count chain over `s`, the oracle side of
+    * [[sizedPostings]] + [[countPairs]]: `inv`, the df-capped `keep`
+    * tokens, `pair(id_a, id_b, inter)` over the pairs `pairWhere` admits
+    * (all when empty), and the shingle-set sizes `sz(doc_id, n)`. */
+  private def shinglePairCtesSql(pairWhere: String = ""): String = {
+    val where = if (pairWhere.isEmpty) "" else s"\n  WHERE $pairWhere"
+    s"""$invCteSql,
+       |keep AS (SELECT tok FROM inv GROUP BY tok HAVING COUNT(*) BETWEEN 2 AND 100),
+       |pair AS (
+       |  SELECT x.doc_id AS id_a, y.doc_id AS id_b, COUNT(*) AS inter
+       |  FROM inv x JOIN keep k ON k.tok = x.tok
+       |  JOIN inv y ON x.tok = y.tok AND x.doc_id < y.doc_id$where
+       |  GROUP BY 1, 2),
+       |sz AS (SELECT doc_id, len(sh) AS n FROM s)""".stripMargin
+  }
+
+  /** The pair rows of a [[shinglePairCtesSql]] chain with both ends'
+    * sizes as `sa.n`/`sb.n`, and their Jaccard ([[pairJaccard]]). */
+  private val pairSizesSql =
+    "FROM pair JOIN sz sa ON sa.doc_id = id_a JOIN sz sb ON sb.doc_id = id_b"
+  private val jaccardSql = "CAST(inter AS DOUBLE) / (sa.n + sb.n - inter)"
+
   /** The simhash pair statement, shared by the `dedup_simhash` oracle and
     * (nested as a CTE body) the `dedup_clusters_simhash` oracle. */
   private val simhashPairsSql: String = {
@@ -909,25 +922,21 @@ object Dedup {
       s"""SELECT x.vec_id AS id_a, y.vec_id AS id_b
          |  FROM eb x JOIN eb y ON x.b$b = y.b$b AND x.vec_id < y.vec_id""".stripMargin
     }.mkString("\n  UNION\n")
-    s"""WITH e0 AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-       |rr AS (${Similarity.adaptiveBitsSql()}),
-       |eb AS (${Similarity.bandedCteSql(Similarity.LshBands)}),
+    val cosine = Similarity.dotSql("a.v", "b.v")
+    s"""WITH ${Similarity.lshBandedCtesSql},
        |cand AS (
        |  $bandJoins)
        |SELECT c.id_a, c.id_b,
-       |  list_reduce(list_prepend(0.0::DOUBLE,
-       |    list_transform(list_zip(a.v, b.v), p -> p[1] * p[2])),
-       |    (acc, x) -> acc + x) AS cosine
+       |  $cosine AS cosine
        |FROM cand c JOIN e0 a ON a.vec_id = c.id_a JOIN e0 b ON b.vec_id = c.id_b
-       |WHERE list_reduce(list_prepend(0.0::DOUBLE,
-       |    list_transform(list_zip(a.v, b.v), p -> p[1] * p[2])),
-       |    (acc, x) -> acc + x) >= 0.30""".stripMargin
+       |WHERE $cosine >= 0.30""".stripMargin
   }
 
-  /** Connected-components oracle tail: given a CTE `nd(id_a, id_b, …)`
-    * already in scope, label every `table` row with the minimum id of its
-    * component (self if isolated) — the exact contract of the Spark
-    * pointer-jumping side.
+  /** The recursive min-label closure CTEs (edges→reach→canon) over a
+    * pair CTE named `nd` — the shared tail body of every cluster
+    * oracle, labelling every node with the minimum id of its component,
+    * the exact contract of the Spark pointer-jumping side; ends at
+    * `canon($idCol, canonical_id)`.
     *
     * Spelled as pruned min-label propagation, NOT transitive closure:
     * the naive `reach = all (node, reachable)` materializes Σ k² rows per
@@ -940,17 +949,12 @@ object Dedup {
     * strictly improves each visited node's best-known label — the
     * delta-driven recursion cannot terminate before m reaches the whole
     * component. Measured on a 256k-edge synthetic graph: 0.9 s vs 18.3 s
-    * for the closure spelling, byte-identical output. */
-  /** The recursive min-label closure CTEs (edges→reach→canon) over a
-    * pair CTE named `nd` — the shared tail body of every cluster
-    * oracle; ends at `canon($idCol, canonical_id)` so callers pick
-    * their own final select.
+    * for the closure spelling, byte-identical output.
     *
-    * `edges` (and each caller's `nd`) is staged MATERIALIZED (r12,
-    * VERDICT r11 Next #2's 30 s cost gate): the recursive term reads
-    * `edges` every iteration, and inlined it re-ran the whole pair
-    * pipeline — LSH band joins plus 128 interpreted dot products per
-    * vector — once per pointer-jumping round. Measured on
+    * `edges` (and each caller's `nd`) is staged MATERIALIZED: the
+    * recursive term reads `edges` every iteration, and inlined it re-ran
+    * the whole pair pipeline — LSH band joins plus 128 interpreted dot
+    * products per vector — once per round. Measured on
     * dedup_clusters_embedding at sf0.01: 27.8 s inlined → 2.9 s
     * materialized, byte-identical output. */
   private def ccCanonCtesSql(idCol: String): String =
@@ -966,9 +970,10 @@ object Dedup {
        |  SELECT s2 AS $idCol, MIN(d2) AS canonical_id
        |  FROM reach GROUP BY s2)""".stripMargin
 
-  private def ccLabelTailSql(idCol: String, table: String): String =
-    s"""${ccCanonCtesSql(idCol)}
-       |SELECT d.$idCol, COALESCE(c.canonical_id, d.$idCol) AS canonical_id
+  /** Every `table` row's canonical id — its component's `canon` label,
+    * or itself when isolated: the oracle side of [[clusterLabels]]. */
+  private def ccLabelSql(idCol: String, table: String): String =
+    s"""SELECT d.$idCol, COALESCE(c.canonical_id, d.$idCol) AS canonical_id
        |FROM $table d LEFT JOIN canon c ON c.$idCol = d.$idCol""".stripMargin
 
   /** ngram-Jaccard pairs + closure, ending at `canon(doc_id,
@@ -976,19 +981,10 @@ object Dedup {
     * `dedup_canonical` oracles so the two can never drift. */
   private lazy val ngramCcCtesSql: String =
     s"""${shCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
-       |inv AS (SELECT DISTINCT doc_id, tok FROM (
-       |  SELECT doc_id, unnest(list_transform(sh, s -> ${hash48Sql("s")})) AS tok FROM s)),
-       |keep AS (SELECT tok FROM inv GROUP BY tok HAVING COUNT(*) BETWEEN 2 AND 100),
-       |pair AS (
-       |  SELECT x.doc_id AS id_a, y.doc_id AS id_b, COUNT(*) AS inter
-       |  FROM inv x JOIN keep k ON k.tok = x.tok
-       |  JOIN inv y ON x.tok = y.tok AND x.doc_id < y.doc_id
-       |  GROUP BY 1, 2),
-       |sz AS (SELECT doc_id, len(sh) AS n FROM s),
+       |${shinglePairCtesSql()},
        |nd AS MATERIALIZED (
-       |  SELECT id_a, id_b FROM pair
-       |  JOIN sz sa ON sa.doc_id = id_a JOIN sz sb ON sb.doc_id = id_b
-       |  WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.8),
+       |  SELECT id_a, id_b $pairSizesSql
+       |  WHERE $jaccardSql >= 0.8),
        |${ccCanonCtesSql("doc_id")}""".stripMargin
 
   /** Shared by `d_contamination` and `d_contamination_bloom`: the bloom
@@ -996,31 +992,24 @@ object Dedup {
     * both spellings contract to the identical frame. */
   private val contaminationSql: String =
     s"""$shCte,
-       |inv AS (SELECT DISTINCT doc_id, tok FROM (
-       |  SELECT doc_id, unnest(list_transform(sh, s -> ${hash48Sql("s")})) AS tok FROM s)),
+       |$invCteSql,
        |e AS (SELECT doc_id AS eval_id, tok FROM inv WHERE doc_id % 50 = 0),
        |c AS (SELECT doc_id, tok FROM inv WHERE doc_id % 50 <> 0)
        |SELECT c.doc_id, e.eval_id, COUNT(*) AS n_shared
        |FROM c JOIN e USING (tok)
-       |GROUP BY 1, 2 HAVING COUNT(*) >= 2""".stripMargin
+       |GROUP BY 1, 2 HAVING COUNT(*) >= $MinShared""".stripMargin
 
-  /** The exact n-gram-Jaccard pair statement — the `dedup_ngram_jaccard`
-    * oracle, also nested (as the truth side) in `dedup_sketch_eval`. */
-  private val ngramPairsOracleSql: String =
+  /** The exact n-gram-Jaccard pair statement over the pairs `pairWhere`
+    * admits — the `dedup_ngram_jaccard` oracle (all pairs, also nested
+    * as the truth side of `dedup_sketch_eval`) and the
+    * `dedup_incremental` one (pairs touching the new batch). */
+  private def ngramPairsOracleSql(pairWhere: String = ""): String =
     s"""$shCte,
-       |inv AS (SELECT DISTINCT doc_id, tok FROM (
-       |  SELECT doc_id, unnest(list_transform(sh, s -> ${hash48Sql("s")})) AS tok FROM s)),
-       |keep AS (SELECT tok FROM inv GROUP BY tok HAVING COUNT(*) BETWEEN 2 AND 100),
-       |pair AS (
-       |  SELECT x.doc_id AS id_a, y.doc_id AS id_b, COUNT(*) AS inter
-       |  FROM inv x JOIN keep k ON k.tok = x.tok
-       |  JOIN inv y ON x.tok = y.tok AND x.doc_id < y.doc_id
-       |  GROUP BY 1, 2),
-       |sz AS (SELECT doc_id, len(sh) AS n FROM s)
+       |${shinglePairCtesSql(pairWhere)}
        |SELECT id_a, id_b,
-       |       CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) AS jaccard
-       |FROM pair JOIN sz sa ON sa.doc_id = id_a JOIN sz sb ON sb.doc_id = id_b
-       |WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.8""".stripMargin
+       |       $jaccardSql AS jaccard
+       |$pairSizesSql
+       |WHERE $jaccardSql >= 0.8""".stripMargin
 
   /** The banded-MinHash pair statement — the `dedup_minhash` oracle, also
     * nested (as the prediction side) in `dedup_sketch_eval`. */
@@ -1086,14 +1075,14 @@ object Dedup {
          |      FROM inv GROUP BY 1)
          |SELECT tok, shingle, df FROM g WHERE df > 3""".stripMargin,
 
-    "dedup_ngram_jaccard" -> ngramPairsOracleSql,
+    "dedup_ngram_jaccard" -> ngramPairsOracleSql(),
 
     // sketch quality gate: nest the two production pair oracles verbatim
     // (prediction = banded MinHash, truth = exact n-gram Jaccard) and
     // reduce their full-outer join to one integer metric row.
     "dedup_sketch_eval" ->
       s"""WITH pred AS (SELECT id_a, id_b FROM ($minhashPairsOracleSql) mp),
-         |truth AS (SELECT id_a, id_b FROM ($ngramPairsOracleSql) tp),
+         |truth AS (SELECT id_a, id_b FROM (${ngramPairsOracleSql()}) tp),
          |m AS (
          |  SELECT COUNT(p.id_a) AS n_pred, COUNT(t.id_a) AS n_true,
          |         COUNT(CASE WHEN p.id_a IS NOT NULL
@@ -1112,42 +1101,20 @@ object Dedup {
 
     "dedup_containment" ->
       s"""$shCte,
-         |inv AS (SELECT DISTINCT doc_id, tok FROM (
-         |  SELECT doc_id, unnest(list_transform(sh, s -> ${hash48Sql("s")})) AS tok FROM s)),
-         |keep AS (SELECT tok FROM inv GROUP BY tok HAVING COUNT(*) BETWEEN 2 AND 100),
-         |pair AS (
-         |  SELECT x.doc_id AS id_a, y.doc_id AS id_b, COUNT(*) AS inter
-         |  FROM inv x JOIN keep k ON k.tok = x.tok
-         |  JOIN inv y ON x.tok = y.tok AND x.doc_id < y.doc_id
-         |  GROUP BY 1, 2),
-         |sz AS (SELECT doc_id, len(sh) AS n FROM s)
+         |${shinglePairCtesSql()}
          |SELECT id_a, id_b,
          |       CASE WHEN sa.n <= sb.n THEN id_a ELSE id_b END AS contained_id,
          |       inter,
          |       CAST(inter AS DOUBLE) / LEAST(sa.n, sb.n) AS containment,
-         |       CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) AS jaccard
-         |FROM pair JOIN sz sa ON sa.doc_id = id_a JOIN sz sb ON sb.doc_id = id_b
+         |       $jaccardSql AS jaccard
+         |$pairSizesSql
          |WHERE CAST(inter AS DOUBLE) / LEAST(sa.n, sb.n) >= 0.8""".stripMargin,
 
+    // the full pair statement restricted to pairs touching the "new
+    // batch" (doc_id % 10 = 0) — df/cap/verify identical to
+    // dedup_ngram_jaccard; only corpus×corpus pairs are excluded
     "dedup_incremental" ->
-      // the full pair statement restricted to pairs touching the "new
-      // batch" (doc_id % 10 = 0) — df/cap/verify identical to
-      // dedup_ngram_jaccard; only corpus×corpus pairs are excluded
-      s"""$shCte,
-         |inv AS (SELECT DISTINCT doc_id, tok FROM (
-         |  SELECT doc_id, unnest(list_transform(sh, s -> ${hash48Sql("s")})) AS tok FROM s)),
-         |keep AS (SELECT tok FROM inv GROUP BY tok HAVING COUNT(*) BETWEEN 2 AND 100),
-         |pair AS (
-         |  SELECT x.doc_id AS id_a, y.doc_id AS id_b, COUNT(*) AS inter
-         |  FROM inv x JOIN keep k ON k.tok = x.tok
-         |  JOIN inv y ON x.tok = y.tok AND x.doc_id < y.doc_id
-         |  WHERE x.doc_id % 10 = 0 OR y.doc_id % 10 = 0
-         |  GROUP BY 1, 2),
-         |sz AS (SELECT doc_id, len(sh) AS n FROM s)
-         |SELECT id_a, id_b,
-         |       CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) AS jaccard
-         |FROM pair JOIN sz sa ON sa.doc_id = id_a JOIN sz sb ON sb.doc_id = id_b
-         |WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.8""".stripMargin,
+      ngramPairsOracleSql("x.doc_id % 10 = 0 OR y.doc_id % 10 = 0"),
 
     "dedup_simhash" -> simhashPairsSql,
 
@@ -1155,15 +1122,14 @@ object Dedup {
       // same min-label CC shape as dedup_clusters, over the simhash
       // pair graph (the whole pairs statement nests as a CTE body)
       s"""WITH RECURSIVE nd AS MATERIALIZED ($simhashPairsSql),
-         |${ccLabelTailSql("doc_id", "documents")}""".stripMargin,
+         |${ccCanonCtesSql("doc_id")}
+         |${ccLabelSql("doc_id", "documents")}""".stripMargin,
 
-    "dedup_clusters" -> {
-      // min-label CC of the ngram near-dup graph via recursive CTE;
-      // canonical = min node of the component (incl. self)
+    // min-label CC of the ngram near-dup graph via recursive CTE;
+    // canonical = min node of the component (incl. self)
+    "dedup_clusters" ->
       s"""$ngramCcCtesSql
-         |SELECT d.doc_id, COALESCE(c.canonical_id, d.doc_id) AS canonical_id
-         |FROM documents d LEFT JOIN canon c ON c.doc_id = d.doc_id""".stripMargin
-    },
+         |${ccLabelSql("doc_id", "documents")}""".stripMargin,
 
     "dedup_canonical" -> {
       // same closure; the final select keeps the LONGEST member per
@@ -1187,38 +1153,34 @@ object Dedup {
     "dedup_embedding_lsh" -> embeddingLshPairsSql,
 
     "dedup_clusters_embedding" ->
-      // same transitive-closure shape as the other two cluster oracles,
-      // over the embedding-LSH pair graph; canonical per vec_id
+      // same min-label shape as the other two cluster oracles, over the
+      // embedding-LSH pair graph; canonical per vec_id
       s"""WITH RECURSIVE nd AS MATERIALIZED ($embeddingLshPairsSql),
-         |${ccLabelTailSql("vec_id", "embeddings")}""".stripMargin,
+         |${ccCanonCtesSql("vec_id")}
+         |${ccLabelSql("vec_id", "embeddings")}""".stripMargin,
 
-    "dedup_embedding" ->
+    "dedup_embedding" -> {
+      val cosine = Similarity.dotSql("a.v", "b.v")
       s"""WITH p AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-        |  WHERE vec_id < ${Similarity.NumQueryVecs}),
-        |e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)
-        |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |  list_reduce(list_prepend(0.0::DOUBLE,
-        |    list_transform(list_zip(a.v, b.v), x -> x[1] * x[2])),
-        |    (acc, x) -> acc + x) AS cosine
-        |FROM p a JOIN e b ON a.vec_id < b.vec_id
-        |WHERE list_reduce(list_prepend(0.0::DOUBLE,
-        |    list_transform(list_zip(a.v, b.v), x -> x[1] * x[2])),
-        |    (acc, x) -> acc + x) >= 0.30""".stripMargin,
+         |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
+         |  WHERE vec_id < ${Similarity.NumQueryVecs}),
+         |e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)
+         |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+         |  $cosine AS cosine
+         |FROM p a JOIN e b ON a.vec_id < b.vec_id
+         |WHERE $cosine >= 0.30""".stripMargin
+    },
 
-    // SemDeDup replay from the persisted sem/cents artifact (the ANN-
-    // store oracle convention: hive sig= partition filtered to the
-    // signature recomputed from the corpus). Assignment is the same
-    // argmin fold the engine runs in-plan; the witness join carries the
-    // priority predicate INSIDE the ON clause; every CTE feeding a join
-    // is staged MATERIALIZED (the r11 gate lesson — never hand an
-    // estimate-blind CTE pipeline a join order to get wrong).
+    // SemDeDup replay from the persisted sem/cents artifact (read
+    // through AnnIndex.componentSql like every store oracle).
+    // Assignment is the same argmin fold the engine runs in-plan; the
+    // witness join carries the priority predicate INSIDE the ON clause;
+    // every CTE feeding a join is staged MATERIALIZED, so DuckDB's
+    // estimate-blind CTE pipeline is never left a join order to get
+    // wrong.
     "dedup_semdedup" ->
       s"""WITH sg AS (${AnnIndex.sigSql}),
-         |ct AS MATERIALIZED (SELECT list_id, cent
-         |      FROM read_parquet('${AnnIndex.componentGlob("sem", "cents")}',
-         |                        hive_partitioning = 1), sg
-         |      WHERE sig = sg.s),
+         |ct AS MATERIALIZED (${AnnIndex.componentSql("sem", "cents", "list_id, cent", "sg")}),
          |e AS MATERIALIZED (SELECT vec_id, embedding::DOUBLE[] AS v
          |      FROM embeddings),
          |ev AS MATERIALIZED (SELECT vec_id, v,
@@ -1230,9 +1192,7 @@ object Dedup {
          |          list_transform(cent, x -> x * x)), (acc, x) -> acc + x) AS cn
          |      FROM ct),
          |rt AS (SELECT ev.vec_id, cv.list_id,
-         |        ev.vn + cv.cn - 2.0 * list_reduce(list_prepend(0.0::DOUBLE,
-         |          list_transform(list_zip(ev.v, cv.cent),
-         |            p -> p[1] * p[2])), (acc, x) -> acc + x) AS d
+         |        ev.vn + cv.cn - 2.0 * ${Similarity.dotSql("ev.v", "cv.cent")} AS d
          |      FROM ev, cv),
          |asg AS MATERIALIZED (SELECT vec_id, list_id, d AS d2c FROM (
          |        SELECT *, row_number() OVER (PARTITION BY vec_id
@@ -1243,9 +1203,7 @@ object Dedup {
          |w AS MATERIALIZED (SELECT DISTINCT a.vec_id
          |      FROM av a JOIN av b ON b.list_id = a.list_id
          |       AND (b.d2c < a.d2c OR (b.d2c = a.d2c AND b.vec_id < a.vec_id))
-         |      WHERE list_reduce(list_prepend(0.0::DOUBLE,
-         |          list_transform(list_zip(a.v, b.v), x -> x[1] * x[2])),
-         |          (acc, x) -> acc + x) >= 0.30)
+         |      WHERE ${Similarity.dotSql("a.v", "b.v")} >= 0.30)
          |SELECT av.vec_id, CAST(av.list_id AS BIGINT) AS list_id,
          |       (w.vec_id IS NOT NULL) AS is_dup
          |FROM av LEFT JOIN w ON w.vec_id = av.vec_id""".stripMargin)

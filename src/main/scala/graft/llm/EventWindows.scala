@@ -109,6 +109,42 @@ object EventWindows {
     "ev_sliding"  -> sliding,
     "ev_session"  -> session)
 
+  /** The oracle side of a 30-minute-gap session window, as CTEs ending
+    * at `g(user_id, sess, s_start, s_end, n_events, sum_value)`: shared
+    * by ev_session and its streaming twin st_sessionize.
+    *
+    * Events are pre-aggregated by (user_id, ts) so the lag and
+    * cumulative-sum windows run over DISTINCT timestamps: with raw rows,
+    * two separate window operators could order tied timestamps
+    * differently and split a tie across sessions nondeterministically.
+    * Tied rows are always one session (gap 0), so the pre-agg is
+    * semantics-free. The gap test is >= not >: Spark session_window is
+    * end-exclusive ([start, max(ts)+gap)), so an event at exactly
+    * lastTs+30min opens a NEW session. */
+  private[graft] val SessionCtesSql: String =
+    """e AS (
+      |  SELECT user_id, CAST(ts AS TIMESTAMP) AS t,
+      |         COUNT(*) AS nr, SUM(CAST(value AS DECIMAL(18,2))) AS v
+      |  FROM events GROUP BY 1, 2),
+      |o AS (
+      |  SELECT user_id, t, nr, v,
+      |         CASE WHEN t - lag(t) OVER (PARTITION BY user_id ORDER BY t)
+      |              >= INTERVAL '30 minutes'
+      |              OR lag(t) OVER (PARTITION BY user_id ORDER BY t) IS NULL
+      |         THEN 1 ELSE 0 END AS new_session
+      |  FROM e),
+      |s AS (
+      |  SELECT user_id, t, nr, v,
+      |         SUM(new_session) OVER (PARTITION BY user_id ORDER BY t
+      |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess
+      |  FROM o),
+      |g AS (
+      |  SELECT user_id, sess, MIN(t) AS s_start,
+      |         MAX(t) + INTERVAL '30 minutes' AS s_end,
+      |         CAST(SUM(nr) AS BIGINT) AS n_events,
+      |         CAST(SUM(v) AS DOUBLE) AS sum_value
+      |  FROM s GROUP BY user_id, sess)""".stripMargin
+
   val oracles: Map[String, String] = Map(
     // same per-user previous-arrivals running max in exact µs integers,
     // same planted 0-2h arrival jitter
@@ -158,34 +194,7 @@ object EventWindows {
         |       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
         |FROM w GROUP BY 1, 2""".stripMargin,
 
-    // Pre-aggregated by (user_id, ts) so the lag and cumulative-sum
-    // windows run over DISTINCT timestamps: with raw rows, two separate
-    // window operators could order tied timestamps differently and
-    // split a tie across sessions nondeterministically. Tied rows are
-    // always one session (gap 0), so the pre-agg is semantics-free.
     "ev_session" ->
-      """WITH e AS (
-        |  SELECT user_id, CAST(ts AS TIMESTAMP) AS t,
-        |         COUNT(*) AS nr, SUM(CAST(value AS DECIMAL(18,2))) AS v
-        |  FROM events GROUP BY 1, 2),
-        |o AS (
-        |  SELECT user_id, t, nr, v,
-        |         -- >= not >: Spark session_window is end-exclusive
-        |         -- ([start, max(ts)+gap)), so an event at exactly
-        |         -- lastTs+30min opens a NEW session.
-        |         CASE WHEN t - lag(t) OVER (PARTITION BY user_id ORDER BY t)
-        |              >= INTERVAL '30 minutes'
-        |              OR lag(t) OVER (PARTITION BY user_id ORDER BY t) IS NULL
-        |         THEN 1 ELSE 0 END AS new_session
-        |  FROM e),
-        |s AS (
-        |  SELECT user_id, t, nr, v,
-        |         SUM(new_session) OVER (PARTITION BY user_id ORDER BY t
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess
-        |  FROM o)
-        |SELECT user_id, MIN(t) AS s_start,
-        |       MAX(t) + INTERVAL '30 minutes' AS s_end,
-        |       CAST(SUM(nr) AS BIGINT) AS n_events,
-        |       CAST(SUM(v) AS DOUBLE) AS sum_value
-        |FROM s GROUP BY user_id, sess""".stripMargin)
+      s"""WITH $SessionCtesSql
+         |SELECT user_id, s_start, s_end, n_events, sum_value FROM g""".stripMargin)
 }

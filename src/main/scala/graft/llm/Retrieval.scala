@@ -28,7 +28,7 @@ import graft.Tables
   *    task; ranks are re-derived on the k surviving rows instead).
   *  - Scoring uses literal-for-literal the same arithmetic as the DuckDB
   *    oracle; each TERM's contribution is quantized to integer micro
-  *    BEFORE the per-doc sum (the d_lm_score canon, r9) — a double
+  *    BEFORE the per-doc sum (the d_lm_score canon) — a double
   *    accumulator's value depends on partial-agg order (varies across
   *    runs, not just engines), while the integer sum is order-free —
   *    and the rank key is the integer score (same guard as
@@ -119,7 +119,7 @@ object Retrieval {
   private val hybridRrf: Q = (spark, dir) =>
     hybridRrfPlan(spark, dir, served = false)
 
-  /** The SERVED twin (VERDICT r12 #3): identical sparse side and
+  /** The SERVED twin: identical sparse side and
     * fusion, dense side ranked by the persisted IVF tier instead of
     * the brute scan — candidate generation is posting-row work against
     * the parquet index artifacts, so the dense cost drops from
@@ -263,37 +263,51 @@ object Retrieval {
     "d_hybrid_rrf_served" -> hybridRrfServed,
     "d_retrieval_eval" -> retrievalEval)
 
+  /** One BM25 term contribution in integer micro before rounding — the
+    * DuckDB spelling of the `contrib_u` expression both Spark plans use,
+    * literal for literal. Expects `tf.tf`, `dl.dl` and `stats(n_docs,
+    * avgdl)` in scope; `df` names the term's document frequency. */
+  private def contribSql(df: String): String =
+    s"""ln(CAST(1.0 AS DOUBLE) +
+       |        (stats.n_docs - $df + CAST(0.5 AS DOUBLE)) /
+       |        ($df + CAST(0.5 AS DOUBLE)))
+       |      * (tf.tf * CAST(2.2 AS DOUBLE)) /
+       |        (tf.tf + CAST(1.2 AS DOUBLE) *
+       |          (CAST(0.25 AS DOUBLE) +
+       |           CAST(0.75 AS DOUBLE) * dl.dl / stats.avgdl))
+       |      * CAST(1e6 AS DOUBLE)""".stripMargin
+
+  /** The oracle side of [[bm25TopK]] for [[QueryTerms]]: tokenise,
+    * doc lengths and corpus stats, the query-term postings `q`, per-doc
+    * integer-micro scores `per`, and the 10-row `top`. d_bm25_topk ranks
+    * `top`; d_retrieval_eval also grades `q`'s docs. */
+  private val bm25CtesSql: String =
+    s"""t AS (SELECT doc_id, ${TextOps.ToksSql} AS w FROM documents),
+       |tok AS (SELECT doc_id, unnest(w) AS term FROM t),
+       |tok2 AS (SELECT doc_id, term FROM tok WHERE length(term) > 0),
+       |dl AS (SELECT doc_id, COUNT(*) AS dl FROM tok2 GROUP BY 1),
+       |stats AS (SELECT (SELECT COUNT(*) FROM documents) AS n_docs,
+       |                 (SELECT AVG(dl) FROM dl) AS avgdl),
+       |q AS (SELECT doc_id, term FROM tok2 WHERE term IN (${QueryTerms.map(t => s"'$t'").mkString(", ")})),
+       |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM q GROUP BY 1, 2),
+       |dft AS (SELECT term, COUNT(DISTINCT doc_id) AS df FROM q GROUP BY 1),
+       |scored AS (
+       |  SELECT tf.doc_id,
+       |    ${contribSql("dft.df")} AS contrib_x
+       |  FROM tf JOIN dft USING (term) JOIN dl USING (doc_id)
+       |  CROSS JOIN stats),
+       |per AS (SELECT doc_id,
+       |               CAST(SUM(CAST(round(contrib_x) AS BIGINT)) AS BIGINT)
+       |                 AS score_micro,
+       |               COUNT(*) AS n_terms
+       |        FROM scored GROUP BY 1),
+       |top AS (SELECT doc_id, score_micro, n_terms FROM per
+       |        ORDER BY score_micro DESC, doc_id LIMIT 10)""".stripMargin
+
   val oracles: Map[String, String] = Map(
     "d_retrieval_eval" -> {
-      val termList = QueryTerms.map(t => s"'$t'").mkString(", ")
       val wList = DcgWeightsMicro.mkString("[", ", ", "]")
-      s"""WITH t AS (SELECT doc_id, ${TextOps.ToksSql} AS w FROM documents),
-         |tok AS (SELECT doc_id, unnest(w) AS term FROM t),
-         |tok2 AS (SELECT doc_id, term FROM tok WHERE length(term) > 0),
-         |dl AS (SELECT doc_id, COUNT(*) AS dl FROM tok2 GROUP BY 1),
-         |stats AS (SELECT (SELECT COUNT(*) FROM documents) AS n_docs,
-         |                 (SELECT AVG(dl) FROM dl) AS avgdl),
-         |q AS (SELECT doc_id, term FROM tok2 WHERE term IN ($termList)),
-         |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM q GROUP BY 1, 2),
-         |dft AS (SELECT term, COUNT(DISTINCT doc_id) AS df FROM q GROUP BY 1),
-         |scored AS (
-         |  SELECT tf.doc_id,
-         |    ln(CAST(1.0 AS DOUBLE) +
-         |        (stats.n_docs - dft.df + CAST(0.5 AS DOUBLE)) /
-         |        (dft.df + CAST(0.5 AS DOUBLE)))
-         |      * (tf.tf * CAST(2.2 AS DOUBLE)) /
-         |        (tf.tf + CAST(1.2 AS DOUBLE) *
-         |          (CAST(0.25 AS DOUBLE) +
-         |           CAST(0.75 AS DOUBLE) * dl.dl / stats.avgdl))
-         |      * CAST(1e6 AS DOUBLE) AS contrib_x
-         |  FROM tf JOIN dft USING (term) JOIN dl USING (doc_id)
-         |  CROSS JOIN stats),
-         |per AS (SELECT doc_id,
-         |               CAST(SUM(CAST(round(contrib_x) AS BIGINT)) AS BIGINT)
-         |                 AS score_micro
-         |        FROM scored GROUP BY 1),
-         |top AS (SELECT doc_id, score_micro FROM per
-         |        ORDER BY score_micro DESC, doc_id LIMIT 10),
+      s"""WITH $bm25CtesSql,
          |ranked AS (SELECT doc_id,
          |             row_number() OVER (ORDER BY score_micro DESC, doc_id)
          |               AS rk
@@ -326,62 +340,28 @@ object Retrieval {
          |FROM m1, m2, m3""".stripMargin
     },
 
-    "d_bm25_topk" -> {
-      val termList = QueryTerms.map(t => s"'$t'").mkString(", ")
-      s"""WITH t AS (SELECT doc_id, ${TextOps.ToksSql} AS w FROM documents),
-         |tok AS (SELECT doc_id, unnest(w) AS term FROM t),
-         |tok2 AS (SELECT doc_id, term FROM tok WHERE length(term) > 0),
-         |dl AS (SELECT doc_id, COUNT(*) AS dl FROM tok2 GROUP BY 1),
-         |stats AS (SELECT (SELECT COUNT(*) FROM documents) AS n_docs,
-         |                 (SELECT AVG(dl) FROM dl) AS avgdl),
-         |q AS (SELECT doc_id, term FROM tok2 WHERE term IN ($termList)),
-         |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM q GROUP BY 1, 2),
-         |dft AS (SELECT term, COUNT(DISTINCT doc_id) AS df FROM q GROUP BY 1),
-         |scored AS (
-         |  SELECT tf.doc_id,
-         |    ln(CAST(1.0 AS DOUBLE) +
-         |        (stats.n_docs - dft.df + CAST(0.5 AS DOUBLE)) /
-         |        (dft.df + CAST(0.5 AS DOUBLE)))
-         |      * (tf.tf * CAST(2.2 AS DOUBLE)) /
-         |        (tf.tf + CAST(1.2 AS DOUBLE) *
-         |          (CAST(0.25 AS DOUBLE) +
-         |           CAST(0.75 AS DOUBLE) * dl.dl / stats.avgdl))
-         |      * CAST(1e6 AS DOUBLE) AS contrib_x
-         |  FROM tf JOIN dft USING (term) JOIN dl USING (doc_id)
-         |  CROSS JOIN stats),
-         |per AS (SELECT doc_id,
-         |               CAST(SUM(CAST(round(contrib_x) AS BIGINT)) AS BIGINT)
-         |                 AS score_micro,
-         |               COUNT(*) AS n_terms
-         |        FROM scored GROUP BY 1),
-         |top AS (SELECT doc_id, score_micro, n_terms FROM per
-         |        ORDER BY score_micro DESC, doc_id LIMIT 10)
+    "d_bm25_topk" ->
+      s"""WITH $bm25CtesSql
          |SELECT doc_id, score_micro, n_terms,
          |       row_number() OVER (ORDER BY score_micro DESC, doc_id) AS rk
-         |FROM top""".stripMargin
-    },
+         |FROM top""".stripMargin,
 
     // Mirrors hybridRrf stage for stage: same tokenization, rarest-term
     // query compression, BM25 integer-micro contribs (the d_bm25_topk
     // spelling), brute cosine ranks (the sim_topk_brute spelling), and
     // the exact 10⁹/(60+rank) RRF floors. Staging CTEs MATERIALIZED
     // (the j9/ADC rule).
-    "d_hybrid_rrf" -> {
-      val dotSql =
-        """list_reduce(list_prepend(0.0::DOUBLE,
-          |    list_transform(list_zip(q.qv, e.v), p -> p[1] * p[2])),
-          |    (acc, x) -> acc + x)""".stripMargin
-      hybridSql(
-        s"""e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-           |qv AS (SELECT vec_id AS query_id, v AS qv FROM e
-           |       WHERE vec_id < ${Similarity.NumQueryVecs}),
-           |den0 AS (SELECT q.query_id, e.vec_id AS doc_id, $dotSql AS cosine
-           |         FROM qv q, e WHERE e.vec_id <> q.query_id),
-           |de AS MATERIALIZED (SELECT query_id, doc_id, r_dense FROM (
-           |    SELECT *, row_number() OVER (PARTITION BY query_id
-           |      ORDER BY cosine DESC, doc_id) AS r_dense FROM den0)
-           |  WHERE r_dense <= 20)""".stripMargin)
-    },
+    "d_hybrid_rrf" -> hybridSql(
+      s"""e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+         |qv AS (SELECT vec_id AS query_id, v AS qv FROM e
+         |       WHERE vec_id < ${Similarity.NumQueryVecs}),
+         |den0 AS (SELECT q.query_id, e.vec_id AS doc_id,
+         |           ${Similarity.dotSql("q.qv", "e.v")} AS cosine
+         |         FROM qv q, e WHERE e.vec_id <> q.query_id),
+         |de AS MATERIALIZED (SELECT query_id, doc_id, r_dense FROM (
+         |    SELECT *, row_number() OVER (PARTITION BY query_id
+         |      ORDER BY cosine DESC, doc_id) AS r_dense FROM den0)
+         |  WHERE r_dense <= 20)""".stripMargin),
 
     // The served twin: dense ranks come from the IVF candidate scoring
     // fragment (the sim_topk_ivf routing over the persisted parquet
@@ -424,14 +404,7 @@ object Retrieval {
          |  GROUP BY 1, 2, 3, 4),
          |sc AS (
          |  SELECT tf.query_id, tf.doc_id,
-         |    ln(CAST(1.0 AS DOUBLE) +
-         |        (stats.n_docs - tf.df + CAST(0.5 AS DOUBLE)) /
-         |        (tf.df + CAST(0.5 AS DOUBLE)))
-         |      * (tf.tf * CAST(2.2 AS DOUBLE)) /
-         |        (tf.tf + CAST(1.2 AS DOUBLE) *
-         |          (CAST(0.25 AS DOUBLE) +
-         |           CAST(0.75 AS DOUBLE) * dl.dl / stats.avgdl))
-         |      * CAST(1e6 AS DOUBLE) AS contrib_x
+         |    ${contribSql("tf.df")} AS contrib_x
          |  FROM tf JOIN dl USING (doc_id) CROSS JOIN stats),
          |per AS (SELECT query_id, doc_id,
          |          CAST(SUM(CAST(round(contrib_x) AS BIGINT)) AS BIGINT)

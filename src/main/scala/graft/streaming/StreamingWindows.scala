@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.types._
 
+import graft.llm.{EventWindows, TemporalJoins}
 import graft.util.Cols._
 
 /** µs-held timestamp codec shared by the stateful ops (the
@@ -133,7 +134,7 @@ object StreamingWindows {
   case class UserState(n: Long, lastTs: Long)
   case class UserCount(user_id: Long, n: Long, last_ts: java.sql.Timestamp)
 
-  /** BY-NAME typed projection for the stateful operators (ADVICE r7): a
+  /** BY-NAME typed projection for the stateful operators: a
     * positional `.as[(Long, Timestamp, ...)]` silently keys on whatever
     * column happens to sit third — any upstream reordering would
     * sessionize on the wrong column or fail at runtime. Selecting the
@@ -179,8 +180,8 @@ object StreamingWindows {
     * under ANY row arrival order. State is ONE narrow row per key —
     * bounded by key cardinality, never by stream length; with an
     * inactivity timeout this is the standard compacting-changelog
-    * pattern at any scale. By-name typed projection per the r7
-    * positional-tuple lesson. The ordering uses Timestamp.compareTo —
+    * pattern at any scale. By-name typed projection, so no column
+    * is keyed by its position. The ordering uses Timestamp.compareTo —
     * nanos-aware — NOT getTime, which truncates the event time to
     * millis and silently disagrees with the batch max_by on
     * microsecond data (caught by the parity spec). */
@@ -214,7 +215,14 @@ object StreamingWindows {
     * dropDuplicates-without-watermark trap. */
   def streamStreamRangeJoin(purchases: DataFrame, views: DataFrame,
                             lagHours: Int = 12,
-                            delay: String = "1 hour"): DataFrame = {
+                            delay: String = "1 hour"): DataFrame =
+    intervalJoin(purchases, views, lagHours, delay, "inner")
+
+  /** The watermarked purchase ⋈ view interval join both stream-stream
+    * joins run, as `joinType`. */
+  private def intervalJoin(purchases: DataFrame, views: DataFrame,
+                           lagHours: Int, delay: String,
+                           joinType: String): DataFrame = {
     val p = purchases.select(col("event_id").as("p_id"), col("user_id"),
         col("ts").as("p_ts"))
       .withWatermark("p_ts", delay)
@@ -225,7 +233,8 @@ object StreamingWindows {
     p.join(v,
       col("user_id") === col("v_user") &&
         col("v_ts") >= col("p_ts") - expr(s"INTERVAL $lagHours hours") &&
-        col("v_ts") < col("p_ts"))
+        col("v_ts") < col("p_ts"),
+      joinType)
       .select(col("p_id"), col("user_id"), col("p_ts"),
         col("v_id"), col("v_ts"), col("v_value"))
   }
@@ -245,22 +254,8 @@ object StreamingWindows {
     * the timeout join. */
   def streamStreamLeftJoin(purchases: DataFrame, views: DataFrame,
                            lagHours: Int = 12,
-                           delay: String = "1 hour"): DataFrame = {
-    val p = purchases.select(col("event_id").as("p_id"), col("user_id"),
-        col("ts").as("p_ts"))
-      .withWatermark("p_ts", delay)
-    val v = views.select(col("event_id").as("v_id"),
-        col("user_id").as("v_user"), col("ts").as("v_ts"),
-        col("value").as("v_value"))
-      .withWatermark("v_ts", delay)
-    p.join(v,
-      col("user_id") === col("v_user") &&
-        col("v_ts") >= col("p_ts") - expr(s"INTERVAL $lagHours hours") &&
-        col("v_ts") < col("p_ts"),
-      "left_outer")
-      .select(col("p_id"), col("user_id"), col("p_ts"),
-        col("v_id"), col("v_ts"), col("v_value"))
-  }
+                           delay: String = "1 hour"): DataFrame =
+    intervalJoin(purchases, views, lagHours, delay, "left_outer")
 
   /** Custom sessionizer via flatMapGroupsWithState — the full custom-state
     * pattern (Append output + event-time timeout) for session semantics
@@ -328,7 +323,7 @@ object StreamingWindows {
                 // LATER micro-batch that precedes the open session's
                 // start (t < s.start but t ≥ watermark — reachable
                 // because the watermark tracks the global max while this
-                // user's state lags, ADVICE r7): s.start must move back
+                // user's state lags): s.start must move back
                 // to t or the emitted s_start diverges from the batch
                 // semantics.
                 case Some(s) if t - s.last < gapUs && s.start - t < gapUs =>
@@ -647,8 +642,8 @@ object StreamingWindows {
       .agg(array_sort(collect_list(struct(col("code"), col("cent"))))
         .as("cents"))
       .withColumn("one", lit(1))
-    // Schema from the table loader, not a hand-written literal
-    // (ADVICE r12): if the testdata generator changes an element type
+    // Schema from the table loader, not a hand-written literal:
+    // if the testdata generator changes an element type
     // (e.g. float→double) the batch twin adapts via the file's footer
     // and a hardcoded stream schema would break alone at runtime.
     val embSchema = graft.Tables.load(spark, dir, "embeddings").schema
@@ -730,44 +725,19 @@ object StreamingWindows {
     "st_index_update" -> stIndexUpdate)
 
   val oracles: Map[String, String] = Map(
-    // ev_session's batch spelling, minus each user's final session when
-    // it is still inside the finalization watermark. Events are
-    // PRE-AGGREGATED by (user_id, ts) first: with raw rows, the lag and
-    // cumulative-sum windows could order tied timestamps differently
-    // (unstable sorts in two separate window operators) and split a tie
-    // across sessions nondeterministically — on distinct timestamps both
-    // windows have a total order.
+    // ev_session's batch spelling (the shared session chain), minus
+    // each user's final session when it is still inside the
+    // finalization watermark.
     "st_sessionize" ->
-      """WITH e AS (
-        |  SELECT user_id, CAST(ts AS TIMESTAMP) AS t,
-        |         COUNT(*) AS nr, SUM(CAST(value AS DECIMAL(18,2))) AS v
-        |  FROM events GROUP BY 1, 2),
-        |o AS (
-        |  SELECT user_id, t, nr, v,
-        |         CASE WHEN t - lag(t) OVER (PARTITION BY user_id ORDER BY t)
-        |              >= INTERVAL '30 minutes'
-        |              OR lag(t) OVER (PARTITION BY user_id ORDER BY t) IS NULL
-        |         THEN 1 ELSE 0 END AS new_session
-        |  FROM e),
-        |s AS (
-        |  SELECT user_id, t, nr, v,
-        |         SUM(new_session) OVER (PARTITION BY user_id ORDER BY t
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess
-        |  FROM o),
-        |g AS (
-        |  SELECT user_id, sess, MIN(t) AS s_start,
-        |         MAX(t) + INTERVAL '30 minutes' AS s_end,
-        |         CAST(SUM(nr) AS BIGINT) AS n_events,
-        |         CAST(SUM(v) AS DOUBLE) AS sum_value
-        |  FROM s GROUP BY user_id, sess),
-        |mx AS (SELECT MAX(CAST(ts AS TIMESTAMP)) AS max_ts FROM events),
-        |r AS (
-        |  SELECT g.*, max_ts,
-        |         ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY s_start DESC) AS rk
-        |  FROM g, mx)
-        |SELECT user_id, s_start, s_end, n_events, sum_value
-        |FROM r WHERE rk > 1
-        |   OR (epoch_us(s_end) // 1000) < (epoch_us(max_ts) // 1000) - 1800000""".stripMargin,
+      s"""WITH ${EventWindows.SessionCtesSql},
+         |mx AS (SELECT MAX(CAST(ts AS TIMESTAMP)) AS max_ts FROM events),
+         |r AS (
+         |  SELECT g.*, max_ts,
+         |         ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY s_start DESC) AS rk
+         |  FROM g, mx)
+         |SELECT user_id, s_start, s_end, n_events, sum_value
+         |FROM r WHERE rk > 1
+         |   OR (epoch_us(s_end) // 1000) < (epoch_us(max_ts) // 1000) - 1800000""".stripMargin,
 
     // the batch running-count final state: count + µs-exact max ts
     "st_running_counts" ->
@@ -817,58 +787,40 @@ object StreamingWindows {
         |       c.c_name, c.c_mktsegment
         |FROM events e LEFT JOIN customer c ON c.c_custkey = e.user_id""".stripMargin,
 
-    // the batch range join's spelling verbatim (ev_range_join): inner
+    // the batch range join's oracle (ev_range_join): inner
     // stream-stream pairs emit on match, so the drained set is the full
     // batch answer — no finalization predicate needed.
-    "st_range_join" ->
-      """SELECT p.event_id AS p_id, p.user_id AS user_id,
-        |       CAST(p.ts AS TIMESTAMP) AS p_ts,
-        |       v.event_id AS v_id, CAST(v.ts AS TIMESTAMP) AS v_ts,
-        |       v.value AS v_value
-        |FROM events p JOIN events v
-        |  ON v.user_id = p.user_id
-        | AND CAST(v.ts AS TIMESTAMP) >= CAST(p.ts AS TIMESTAMP) - INTERVAL '12 hours'
-        | AND CAST(v.ts AS TIMESTAMP) < CAST(p.ts AS TIMESTAMP)
-        |WHERE p.event_type = 'purchase' AND v.event_type = 'view'""".stripMargin,
+    "st_range_join" -> TemporalJoins.oracles("ev_range_join"),
 
-    // the inner pairs (batch-identical, emitted on match) plus the
+    // the inner pairs (ev_range_join's, emitted on match) plus the
     // null-extended purchases the finalization batch EVICTED: no
     // qualifying view exists AND p_ts sits strictly below the final
     // global watermark = min(per-side ms-floored max event time) −
     // delay — the min-policy over the two watermarked sources, spelled
     // µs-exactly like st_sessionize's boundary.
     "st_left_join" ->
-      """WITH m AS (
-        |  SELECT p.event_id AS p_id, p.user_id AS user_id,
-        |         CAST(p.ts AS TIMESTAMP) AS p_ts,
-        |         v.event_id AS v_id, CAST(v.ts AS TIMESTAMP) AS v_ts,
-        |         v.value AS v_value
-        |  FROM events p JOIN events v
-        |    ON v.user_id = p.user_id
-        |   AND CAST(v.ts AS TIMESTAMP) >= CAST(p.ts AS TIMESTAMP) - INTERVAL '12 hours'
-        |   AND CAST(v.ts AS TIMESTAMP) < CAST(p.ts AS TIMESTAMP)
-        |  WHERE p.event_type = 'purchase' AND v.event_type = 'view'),
-        |wm AS (
-        |  SELECT LEAST(
-        |    (SELECT MAX(epoch_us(CAST(ts AS TIMESTAMP)) // 1000)
-        |       FROM events WHERE event_type = 'purchase'),
-        |    (SELECT MAX(epoch_us(CAST(ts AS TIMESTAMP)) // 1000)
-        |       FROM events WHERE event_type = 'view')) - 3600000 AS wm_ms),
-        |u AS (
-        |  SELECT p.event_id AS p_id, p.user_id AS user_id,
-        |         CAST(p.ts AS TIMESTAMP) AS p_ts,
-        |         CAST(NULL AS BIGINT) AS v_id,
-        |         CAST(NULL AS TIMESTAMP) AS v_ts,
-        |         CAST(NULL AS DOUBLE) AS v_value
-        |  FROM events p, wm
-        |  WHERE p.event_type = 'purchase'
-        |    AND (epoch_us(CAST(p.ts AS TIMESTAMP)) // 1000) < wm.wm_ms
-        |    AND NOT EXISTS (
-        |      SELECT 1 FROM events v
-        |      WHERE v.event_type = 'view' AND v.user_id = p.user_id
-        |        AND CAST(v.ts AS TIMESTAMP) >= CAST(p.ts AS TIMESTAMP) - INTERVAL '12 hours'
-        |        AND CAST(v.ts AS TIMESTAMP) < CAST(p.ts AS TIMESTAMP)))
-        |SELECT * FROM m UNION ALL SELECT * FROM u""".stripMargin,
+      s"""WITH m AS (${TemporalJoins.oracles("ev_range_join")}),
+         |wm AS (
+         |  SELECT LEAST(
+         |    (SELECT MAX(epoch_us(CAST(ts AS TIMESTAMP)) // 1000)
+         |       FROM events WHERE event_type = 'purchase'),
+         |    (SELECT MAX(epoch_us(CAST(ts AS TIMESTAMP)) // 1000)
+         |       FROM events WHERE event_type = 'view')) - 3600000 AS wm_ms),
+         |u AS (
+         |  SELECT p.event_id AS p_id, p.user_id AS user_id,
+         |         CAST(p.ts AS TIMESTAMP) AS p_ts,
+         |         CAST(NULL AS BIGINT) AS v_id,
+         |         CAST(NULL AS TIMESTAMP) AS v_ts,
+         |         CAST(NULL AS DOUBLE) AS v_value
+         |  FROM events p, wm
+         |  WHERE p.event_type = 'purchase'
+         |    AND (epoch_us(CAST(p.ts AS TIMESTAMP)) // 1000) < wm.wm_ms
+         |    AND NOT EXISTS (
+         |      SELECT 1 FROM events v
+         |      WHERE v.event_type = 'view' AND v.user_id = p.user_id
+         |        AND CAST(v.ts AS TIMESTAMP) >= CAST(p.ts AS TIMESTAMP) - INTERVAL '12 hours'
+         |        AND CAST(v.ts AS TIMESTAMP) < CAST(p.ts AS TIMESTAMP)))
+         |SELECT * FROM m UNION ALL SELECT * FROM u""".stripMargin,
 
     "st_latest_state" ->
       """WITH r AS (

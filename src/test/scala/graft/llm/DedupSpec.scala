@@ -197,6 +197,16 @@ class DedupSpec extends SparkSpec {
       s"chain not fully merged: ${canon.filter(_._2 != 0L)}")
   }
 
+  test("connectedComponents throws instead of returning split components at its round cap") {
+    import spark.implicits._
+    // a 64-node chain needs ~log2(64) pointer-jumping rounds; one round
+    // leaves it split, which must fail loudly rather than be returned
+    val chain = (0L until 63L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val e = intercept[IllegalStateException](
+      Dedup.connectedComponents(chain, maxRounds = 1).collect())
+    assert(e.getMessage.contains("not converged after 1 rounds"), e.getMessage)
+  }
+
   test("connectedComponents equals driver-side union-find on random graphs") {
     import spark.implicits._
     // Property check of the distributed CC (incl. the monotone label-sum
